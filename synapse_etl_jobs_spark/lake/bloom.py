@@ -42,6 +42,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.sources.lake_datasource import spark_xxhash64
 
@@ -57,15 +58,18 @@ def _position_cols(key_cols: list[str], bits: int) -> list:
 
 
 def compute_file_blooms(
-    spark: SparkSession, files: list[str], key_cols: list[str], bits: int
+    spark: SparkSession, files: list[str], key_schema: StructType, bits: int
 ) -> dict[str, dict[str, Any]]:
-    """One Spark job: per-file bloom bitmaps over the key columns of the
-    given parquet files. Returns ``{path: {"bits": m, "k": K, "b64": ...}}``."""
+    """One Spark job: per-file bloom bitmaps over the key columns
+    (``key_schema``'s fields, in order) of the given parquet files.
+    Returns ``{path: {"bits": m, "k": K, "b64": ...}}``. The read is given
+    the key schema, so no schema-inference job over the footers runs."""
     if not files or bits <= 0:
         return {}
+    key_cols = key_schema.fieldNames()
     n_words = (bits + 63) // 64
     rows = (
-        spark.read.parquet(*files)
+        spark.read.schema(key_schema).parquet(*files)
         .select(F.input_file_name().alias("_f"), *key_cols)
         .select("_f", F.explode(F.array(*_position_cols(key_cols, bits))).alias("_p"))
         .select(

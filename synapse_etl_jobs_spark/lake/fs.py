@@ -23,6 +23,7 @@ metastore swap), so these two methods are the single override point.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 
@@ -155,6 +156,22 @@ class HadoopFS:
     def _fs(self, p: str):
         return self._path(p).getFileSystem(self._conf)
 
+    @contextlib.contextmanager
+    def _missing_as_fnf(self, path: str):
+        """Re-raise a JVM ``java.io.FileNotFoundException`` (or subclass;
+        HDFS unwraps its RemoteException to one) as Python's
+        ``FileNotFoundError`` — the error ``LocalFS`` raises, so callers'
+        retry-on-missing logic works on every scheme."""
+        try:
+            yield
+        except Exception as e:
+            je = getattr(e, "java_exception", None)
+            if je is not None and self._jvm.java.lang.Class.forName(
+                "java.io.FileNotFoundException"
+            ).isInstance(je):
+                raise FileNotFoundError(path) from e
+            raise
+
     def write_text_atomic(self, path: str, text: str) -> None:
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         fs = self._fs(path)
@@ -246,7 +263,8 @@ class HadoopFS:
 
     def read_text(self, path: str) -> str:
         fs = self._fs(path)
-        stream = fs.open(self._path(path))
+        with self._missing_as_fnf(path):
+            stream = fs.open(self._path(path))
         try:
             reader = self._jvm.java.io.BufferedReader(
                 self._jvm.java.io.InputStreamReader(stream, "UTF-8")
@@ -297,11 +315,13 @@ class HadoopFS:
         )
 
     def size(self, path: str) -> int:
-        return self._fs(path).getFileStatus(self._path(path)).getLen()
+        with self._missing_as_fnf(path):
+            return self._fs(path).getFileStatus(self._path(path)).getLen()
 
     def mtime(self, path: str) -> float:
         """Last-modification time, seconds since epoch."""
-        st = self._fs(path).getFileStatus(self._path(path))
+        with self._missing_as_fnf(path):
+            st = self._fs(path).getFileStatus(self._path(path))
         return st.getModificationTime() / 1000.0
 
     def upload(self, local_path: str, dst: str) -> None:

@@ -78,6 +78,9 @@ LIVE_KEY = "__live__"  # reserved _cseq map key: latest non-DELETE seq (touch)
 PATCH_PROP = "patch_seqs"
 # internal columns hidden from user-facing reads
 INTERNAL_COLS = (SEQ_COL, DELETED_COL, CSEQ_COL, FOLD_COL)
+# default stream ids of delete_where / update_where; the only ids whose
+# markers lived under the shared "maintenance" stream before namespacing
+DEFAULT_MAINTENANCE_STREAMS = ("maintenance-delete", "maintenance-update")
 
 
 
@@ -402,8 +405,10 @@ class LakeTable:
         repo a hot bucket: with a zipf-skewed stream one bucket can hold
         >20% of a batch, so an unsalted ``repartition(bucket)`` write
         serializes that bucket into one straggler task (benched: salt=4
-        cut a skewed 4M-event batch write 18-22%). Costs ≤``write_salt``
-        files per bucket per commit; ``compact()`` folds them.
+        cut a skewed 4M-event batch write 18-22%). The salt caps the
+        files per bucket for large writes (≤``write_salt`` per commit);
+        small writes get one file per bucket, because AQE coalesces the
+        write shuffle. ``compact()`` folds them.
 
         ``point_index_bits`` (opt-in) attaches a per-file key bloom
         filter of that many bits to every data file written by merge and
@@ -621,11 +626,15 @@ class LakeTable:
                              sort_cols: "Sequence[str] | None" = None,
                              cluster: "tuple[Column, int] | None" = None,
                              parts_by_bucket: "dict[int, int] | None" = None) -> None:
-        """Write ``df`` hive-partitioned by ``_bucket``, spreading each
-        bucket over ``write_salt`` writer tasks (salt = key hash, so the
-        file a row lands in is deterministic given the partitioning) —
+        """Write ``df`` hive-partitioned by ``_bucket``, shuffled on
+        (bucket, salt) with salt = key hash in ``[0, write_salt)`` —
         defuses hot-bucket write stragglers without touching bucket
-        assignment or merge keys.
+        assignment or merge keys. The default shape repartitions by
+        column WITHOUT a count, so AQE coalesces the shuffle to the
+        session's advisory partition size: a large write keeps the
+        salt's split (≤ ``write_salt`` files per bucket), a small one
+        collapses to one file per touched bucket instead of
+        ``num_buckets × write_salt`` tiny files.
 
         ``parts_by_bucket`` (binpack rewrites) overrides the uniform
         salt with a PER-BUCKET file-count target: bucket b's rows are
@@ -633,9 +642,10 @@ class LakeTable:
         buckets emit many target-sized files and small buckets one. The
         repartition slot count carries 2x slack — two (bucket, group)
         tuples hashing to the same slot would merge into one oversized
-        file, and slack makes that rare instead of systematic."""
+        file, and slack makes that rare instead of systematic. The
+        clustered and binpack shapes keep explicit slot counts: their
+        file counts are the point of the rewrite."""
         salt = max(int(self.manifest.props.get("write_salt", 1)), 1)
-        parts = max(self.manifest.num_buckets, min_tasks) * salt
         if parts_by_bucket:
             # shared by the clustered and key-hash binpack shapes below:
             # per-bucket target file count as a map literal, and a slot
@@ -700,7 +710,9 @@ class LakeTable:
                 split = [F.col(BUCKET_COL), range_col]
                 if sub_n > 1:
                     split.append(F.pmod(key_hash, F.lit(sub_n)))
-                df = df.repartition(parts, *split)
+                df = df.repartition(
+                    max(self.manifest.num_buckets, min_tasks) * salt, *split
+                )
             # projection after the sort preserves intra-partition order
             df = df.sortWithinPartitions(
                 BUCKET_COL, "_zcode", *list(sort_cols or [])
@@ -729,9 +741,9 @@ class LakeTable:
                            *[F.col(k) for k in self.manifest.key_cols]),
                 F.lit(salt),
             )
-            df = df.repartition(parts, F.col(BUCKET_COL), salt_col)
+            df = df.repartition(F.col(BUCKET_COL), salt_col)
         else:
-            df = df.repartition(parts, F.col(BUCKET_COL))
+            df = df.repartition(F.col(BUCKET_COL))
         if sort_cols:
             # range-cluster each output file: parquet row-group min/max
             # stats on the sort columns become selective, so range
@@ -1076,8 +1088,11 @@ class LakeTable:
             return {}
         from synapse_etl_jobs_spark.lake.bloom import compute_file_blooms
 
+        # the files were just written under the current schema
+        current = self.manifest.current_schema()
         return compute_file_blooms(
-            self.spark, files, self.manifest.key_cols, bits
+            self.spark, files,
+            StructType([current[c] for c in self.manifest.key_cols]), bits,
         )
 
     def lookup_keys(self, key_values: Sequence[tuple]) -> DataFrame:
@@ -1346,11 +1361,13 @@ class LakeTable:
 
         1. idempotency gate — a batch_id already recorded is a no-op;
         2. LWW-reduce the batch (salted two-phase if requested) and write
-           it bucket-partitioned in ONE Spark job; affected buckets, row
-           counts, bytes, and the batch's seq range all come from the
-           written parquet FOOTERS — no second pass, no caching of the
-           batch (benched: persist of the deduped batch cost more than
-           the whole write);
+           it bucket-partitioned in one pass over the batch (one Spark
+           job per shuffle stage under AQE; ≤ ``write_salt`` files per
+           bucket for a large batch, one for a small one); affected
+           buckets, row counts, bytes, and the batch's seq range all
+           come from the written parquet FOOTERS — no second pass, no
+           caching of the batch (benched: persist of the deduped batch
+           cost more than the whole write);
         3. ``mor``: commit those files as deltas — done;
            ``cow``: second job joins stored files of the affected buckets
            with the staged files (plain parquet reads, no recompute) via
@@ -1543,7 +1560,7 @@ class LakeTable:
                 merged = self._lww_stored(combined).withColumn(
                     BUCKET_COL, self._bucket_expr()
                 )
-                self._salted_bucket_write(merged, commit_dir, min_tasks=len(affected))
+                self._salted_bucket_write(merged, commit_dir)
                 written = _list_parquet_files(commit_dir, self.fs)
             except BaseException:
                 # a failed fold must not orphan the multi-GB staging dir
@@ -2191,15 +2208,9 @@ class LakeTable:
         (exactly-once bookkeeping), writing zero files.
         """
         self._reject_fixed_merge_kwargs(merge_kwargs)
-        if (batch_id is not None and stream_id.startswith("maintenance-")
-                and self.is_batch_applied("maintenance", batch_id)):
-            # upgrade continuity: markers recorded by the pre-namespacing
-            # release lived under the shared "maintenance" stream — honor
-            # them so a redelivered old batch cannot double-apply (the
-            # cost is the old cross-op-kind false dedupe, but only for
-            # batch ids that predate the upgrade)
-            return {"applied": False, "reason": "batch_already_applied",
-                    "table_version": self.manifest.table_version}
+        skip = self._legacy_maintenance_skip(stream_id, batch_id)
+        if skip is not None:
+            return skip
         matched, prune_stats = self._matched_view(
             predicate, self._sql_refs(predicate)
         )
@@ -2223,6 +2234,24 @@ class LakeTable:
         if prune_stats is not None:
             res["scan_pruning"] = prune_stats
         return res
+
+    def _legacy_maintenance_skip(
+        self, stream_id: str, batch_id: "int | str | None"
+    ) -> "dict[str, Any] | None":
+        """Upgrade continuity for the default maintenance streams: markers
+        recorded by the pre-namespacing release lived under the shared
+        "maintenance" stream — honor them so a redelivered old batch
+        cannot double-apply (the cost is the old cross-op-kind false
+        dedupe, but only for batch ids that predate the upgrade). Only
+        the two default ids ever shared that stream; a custom
+        ``maintenance-*`` id is never short-circuited by it. The skip
+        names the legacy stream in ``marker_stream``."""
+        if (batch_id is None or stream_id not in DEFAULT_MAINTENANCE_STREAMS
+                or not self.is_batch_applied("maintenance", batch_id)):
+            return None
+        return {"applied": False, "reason": "batch_already_applied",
+                "marker_stream": "maintenance",
+                "table_version": self.manifest.table_version}
 
     def update_where(
         self,
@@ -2252,15 +2281,9 @@ class LakeTable:
         column), so their predicate scan is full-width by necessity.
         """
         self._reject_fixed_merge_kwargs(merge_kwargs)
-        if (batch_id is not None and stream_id.startswith("maintenance-")
-                and self.is_batch_applied("maintenance", batch_id)):
-            # upgrade continuity: markers recorded by the pre-namespacing
-            # release lived under the shared "maintenance" stream — honor
-            # them so a redelivered old batch cannot double-apply (the
-            # cost is the old cross-op-kind false dedupe, but only for
-            # batch ids that predate the upgrade)
-            return {"applied": False, "reason": "batch_already_applied",
-                    "table_version": self.manifest.table_version}
+        skip = self._legacy_maintenance_skip(stream_id, batch_id)
+        if skip is not None:
+            return skip
         m = self.manifest
         fields = set(m.current_schema().fieldNames())
         if not set_exprs:
@@ -2357,9 +2380,10 @@ class LakeTable:
     ) -> dict:
         """Maintenance rewrite (Iceberg ``rewrite_data_files`` analog):
         coalesce bucket files and optionally GC tombstones. The rewrite
-        goes through the salted bucket write, so a hot bucket is
-        rewritten by ``write_salt`` tasks (≤ ``write_salt`` output files
-        per bucket) instead of one straggler.
+        goes through the salted bucket write, so a large hot bucket is
+        rewritten by up to ``write_salt`` tasks (≤ ``write_salt`` output
+        files per bucket) instead of one straggler, and a small bucket
+        comes out as one file.
 
         ``sort_cols`` range-clusters the rewrite (Iceberg
         ``rewrite_data_files(strategy => 'sort')`` analog) at BOTH
@@ -2645,7 +2669,7 @@ class LakeTable:
             commit_dir = os.path.join(
                 self.path, "data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}"
             )
-            shadow._salted_bucket_write(df, commit_dir, min_tasks=num_buckets)
+            shadow._salted_bucket_write(df, commit_dir)
             written = _list_parquet_files(commit_dir, self.fs)
             new_files = [fp for fps in written.values() for fp in fps]
             blooms = shadow._file_blooms(new_files)

@@ -15,5 +15,19 @@ def spark():
 
 
 @pytest.fixture()
+def aqe_coalesce_off(spark):
+    """Turn off AQE partition coalescing for one test: a small batch then
+    gets the multi-file bucketed layout only a large batch gets with it
+    on (one writer task per shuffle slot instead of one per bucket)."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.fixture()
 def tmp_table_path(tmp_path):
     return str(tmp_path / "table")

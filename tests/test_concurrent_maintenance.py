@@ -313,3 +313,23 @@ def test_maintenance_honors_legacy_shared_markers(spark, tmp_path):
     r2 = t.update_where("k = 1", {"v": "'zz'"}, batch_id="legacy-7")
     assert not r1["applied"] and not r2["applied"]
     assert r1["reason"] == r2["reason"] == "batch_already_applied"
+    assert r1["marker_stream"] == r2["marker_stream"] == "maintenance"
+
+
+def test_custom_maintenance_stream_ignores_legacy_markers(spark, tmp_path):
+    """Only the two default stream ids inherit pre-upgrade markers: a
+    custom namespaced stream ("maintenance-nightly") with the same
+    batch id must apply, not skip."""
+    path = str(tmp_path / "t")
+    t = _mk(spark, path)
+    t.merge(_ev(spark, [(1, "a", "UPSERT", 1), (2, "b", "UPSERT", 2)]),
+            batch_id=0)
+    t.delete_where("k = 1", stream_id="maintenance", batch_id="legacy-7")
+    r = t.update_where("k = 2", {"v": "'zz'"},
+                       stream_id="maintenance-nightly", batch_id="legacy-7")
+    assert r["applied"], r
+    assert _state(t) == {(2, "zz")}
+    r = t.delete_where("k = 2", stream_id="maintenance-nightly2",
+                       batch_id="legacy-7")
+    assert r["applied"], r
+    assert _state(t) == set()

@@ -26,7 +26,7 @@ def test_distributed_footer_stats_match_driver(spark, tmp_path):
     assert (lo, hi) == (0, 4999)
 
 
-def test_merge_lineage_unchanged_with_many_files(spark, tmp_path):
+def test_merge_lineage_unchanged_with_many_files(spark, tmp_path, aqe_coalesce_off):
     """A merge whose staged file count crosses the distribute threshold
     still records correct lineage/source stats."""
     schema = StructType().add("k", "long").add("v", "string")

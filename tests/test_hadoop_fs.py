@@ -59,6 +59,32 @@ def test_hadoopfs_primitives(spark):
     assert fs.pyarrow_path("s3a://b/x") is None
 
 
+def test_hadoopfs_missing_file_raises_filenotfound(spark, monkeypatch):
+    """A missing file raises FileNotFoundError on a file: URI as it does
+    on LocalFS, so TxnLog.latest() re-resolves past a record that a
+    retention sweep reclaimed between resolve and read."""
+    from synapse_etl_jobs_spark.lake.txn import TxnLog
+
+    fs = HadoopFS(spark)
+    root = "file:" + tempfile.mkdtemp(prefix="hfs_")
+    for op in (fs.read_text, fs.size, fs.mtime):
+        with pytest.raises(FileNotFoundError):
+            op(root + "/nope.txt")
+    log = TxnLog(root + "/txn", spark)
+    log.commit({"/a": 1})
+    log.commit({"/a": 2})
+    fs.delete(log._rec_path(0))
+    real, calls = TxnLog._resolve_current, []
+
+    def stale_first(self):
+        calls.append(1)
+        return 0 if len(calls) == 1 else real(self)
+
+    monkeypatch.setattr(TxnLog, "_resolve_current", stale_first)
+    assert log.latest()["tables"] == {"/a": 2}
+    assert len(calls) == 2
+
+
 @pytest.fixture(scope="module")
 def uri_table(spark):
     path = "file:" + tempfile.mkdtemp(prefix="lake_uri_") + "/t"

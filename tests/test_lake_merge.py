@@ -103,6 +103,26 @@ def test_salted_merge_same_result(spark, events, tmp_table_path):
     assert_states_equal(table_state(t), pandas_oracle(events.toPandas()))
 
 
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_small_batch_writes_one_file_per_bucket(spark, tmp_table_path, mode):
+    """The write salt splits large buckets, not small batches: a 2,000-key
+    merge into 4 buckets with write_salt=4 coalesces to one file per
+    touched bucket instead of num_buckets × write_salt tiny files."""
+    t = LakeTable.create(
+        spark, tmp_table_path, StructType().add("k", "long").add("v", "string"),
+        ["k"], num_buckets=4, write_mode=mode, write_salt=4,
+    )
+    ev = spark.range(2000).select(
+        F.lit("UPSERT").alias("op"), F.col("id").alias("seq"),
+        F.col("id").alias("k"), F.col("id").cast("string").alias("v"),
+    )
+    s = t.merge(ev, batch_id=0)
+    files_per_bucket = sorted(len(v) for v in t.manifest.buckets.values())
+    assert files_per_bucket == [1, 1, 1, 1], files_per_bucket
+    assert s["files_written"] == 4
+    assert t.read().count() == 2000
+
+
 def test_delete_semantics(spark, tmp_table_path):
     t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=4)
     rows = [

@@ -116,7 +116,9 @@ def test_bloom_membership_unit(spark, tmp_path):
     ).coalesce(1).write.parquet(p)
     import glob
     f = glob.glob(p + "/*.parquet")[0]
-    blooms = compute_file_blooms(spark, [f], ["repo", "path"], 1024)
+    blooms = compute_file_blooms(
+        spark, [f], StructType().add("repo", "string").add("path", "string"), 1024
+    )
     assert list(blooms) == [f]
     b = blooms[f]
     assert bloom_might_contain(b, key_positions(("k1", "v1"), ["string", "string"], 1024))

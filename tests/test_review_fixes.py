@@ -48,7 +48,7 @@ def test_replay_no_loss_above_2_53(spark, tmp_path):
     assert got == {(1, "v1"), (3, "v3")}
 
 
-def test_salted_write_spreads_within_bucket(spark, tmp_path):
+def test_salted_write_spreads_within_bucket(spark, tmp_path, aqe_coalesce_off):
     """Single-key table, salt dividing num_buckets: the old bucket-derived
     salt put every row of a bucket on one salt value (1 file/bucket).
     The decorrelated salt must spread a bucket's distinct keys over

@@ -85,7 +85,7 @@ def test_sorted_compaction_range_clusters_files(spark, tmp_path):
         assert vals == sorted(vals), f"file not clustered: {fp}"
 
 
-def test_sorted_binpack_range_splits_files(spark, tmp_path):
+def test_sorted_binpack_range_splits_files(spark, tmp_path, aqe_coalesce_off):
     """sort_cols + target_file_mb: files get contiguous ranges of the
     leading sort column (not key-hash-random subsets), so per-file
     [min,max] stats actually skip files for ranged predicates."""
