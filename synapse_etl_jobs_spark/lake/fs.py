@@ -34,8 +34,8 @@ def uri_norm(p: str) -> str:
     (Spark may render ``file:///x`` where the manifest says ``file:/x``
     or a bare ``/x``). Percent-encoding is unquoted; the authority is
     dropped (hosted ``file://host/x`` URIs are not produced by this
-    engine). Shared by the footer-stats, column-stats, and bloom
-    matching sites — they MUST agree on which files matched."""
+    engine). Shared by the footer-stats and bloom matching sites — they
+    MUST agree on which files matched."""
     from urllib.parse import unquote, urlparse
 
     return unquote(urlparse(p).path)

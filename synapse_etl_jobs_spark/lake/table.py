@@ -84,113 +84,103 @@ DEFAULT_MAINTENANCE_STREAMS = ("maintenance-delete", "maintenance-update")
 
 
 
-def _list_parquet_files(root: str, fs=None) -> dict[int, list[str]]:
-    """Map bucket id → parquet files under a ``_bucket=<i>`` hive layout.
+def _list_parquet_files(root: str, fs=None) -> dict[int, dict[str, int]]:
+    """Map bucket id → {parquet file: byte size} under a ``_bucket=<i>``
+    hive layout.
 
     One recursive listing per commit directory through the FS layer
     (POSIX walk locally, ``FileSystem.listFiles(recursive)`` on Hadoop —
-    the same O(files) cost Iceberg pays when committing).
+    the same O(files) cost Iceberg pays when committing). The sizes come
+    with the listing, so no written file is stat'ed again.
     """
-    out: dict[int, list[str]] = {}
-    for fp, _sz in (fs or LocalFS()).list_files(root, ".parquet"):
+    out: dict[int, dict[str, int]] = {}
+    for fp, sz in (fs or LocalFS()).list_files(root, ".parquet"):
         base = os.path.basename(os.path.dirname(fp))
         if not base.startswith(f"{BUCKET_COL}="):
             continue
-        out.setdefault(int(base.split("=", 1)[1]), []).append(fp)
+        out.setdefault(int(base.split("=", 1)[1]), {})[fp] = sz
     return out
 
 
-def _footer_stats(files: list[str], seq_col: str) -> dict[str, Any]:
-    """Row count, byte size, and seq min/max straight from parquet footers
-    (row-group column statistics) — lineage without any extra Spark job."""
-    import pyarrow.parquet as pq
-
-    rows, nbytes = 0, 0
-    seq_min: int | None = None
-    seq_max: int | None = None
-    for fp in files:
-        md = pq.ParquetFile(fp).metadata
-        rows += md.num_rows
-        nbytes += os.path.getsize(fp)
-        try:
-            idx = md.schema.names.index(seq_col)
-        except ValueError:
-            continue
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                continue
-            seq_min = st.min if seq_min is None else min(seq_min, st.min)
-            seq_max = st.max if seq_max is None else max(seq_max, st.max)
-    return {"rows": rows, "bytes": nbytes, "seq_min": seq_min, "seq_max": seq_max}
-
-
-# above this many files, footer stats are parsed by a Spark job instead
-# of a serial driver loop (the O(files) driver term at thousands of
-# files per batch); below it, the job-launch overhead isn't worth it
-_FOOTER_STATS_DISTRIBUTE_THRESHOLD = 32
-
-
-def _footer_stats_many(
-    files: list[str], seq_col: str, spark: "SparkSession | None" = None,
-    fs=None,
+def _footer_stats(
+    listing: dict[int, dict[str, int]], cols: Sequence[str],
+    spark: "SparkSession", fs,
 ) -> dict[str, dict[str, Any]]:
-    """Per-file footer stats for a commit's file set.
+    """Per-file stats of the files in a ``_list_parquet_files`` listing,
+    each file read once: ``rows``, ``bytes`` (the listing's size),
+    ``seq_min``/``seq_max`` of ``_seq``, and under ``stats`` the [min,
+    max] of each of ``cols`` present — the manifest-level column metrics
+    Iceberg keeps per data file, which ``scan_range`` prunes whole files
+    against.
 
-    Small batches parse on the driver (cheap, no job). Large batches run
-    ONE parallelize job over the FILE LIST — each task parses footers
-    only (metadata, no data pages), so commit cost stays flat as batch
-    file count grows instead of becoming the Amdahl term of the ingest
-    path. This is per-file orchestration, not per-row Python — the row
-    path stays entirely JVM-side.
+    Where ``fs.pyarrow_path`` resolves (local paths, ``file:`` URIs) the
+    driver parses the parquet footers: metadata only, no Spark job. On
+    remote storage (hdfs:/s3a:) ONE Spark scan grouped by input file
+    aggregates the same values from the data pages. Columns are matched
+    on the column chunk's full ``path_in_schema``, so a struct field
+    sharing a top-level column's name (``meta.lang`` vs ``lang``) never
+    lends it its range.
     """
-    fs = fs or LocalFS()
-    locs = {fp: fs.pyarrow_path(fp) for fp in files}
-    if any(loc is None for loc in locs.values()):
-        # truly remote storage (hdfs:/s3a:): no driver-side pyarrow —
-        # ONE Spark aggregation over the files computes the same stats
-        # (reads data pages instead of footers; still fully distributed)
-        return _footer_stats_spark_job(files, seq_col, spark, fs)
-    if spark is not None and len(files) > _FOOTER_STATS_DISTRIBUTE_THRESHOLD:
-        sc = spark.sparkContext
-        slices = min(len(files), max(sc.defaultParallelism, 1))
-        pairs = list(locs.items())
-        return dict(
-            sc.parallelize(pairs, slices)
-            .map(lambda kv: (kv[0], _footer_stats([kv[1]], seq_col)))
-            .collect()
-        )
-    return {fp: _footer_stats([loc], seq_col) for fp, loc in locs.items()}
+    sizes = {fp: sz for fps in listing.values() for fp, sz in fps.items()}
+    want = list(dict.fromkeys([SEQ_COL, *cols]))
+    out: dict[str, dict[str, Any]] = {}
 
+    def put(fp: str, rows: int, ranges: dict[str, tuple[Any, Any]]) -> None:
+        seq_min, seq_max = ranges.get(SEQ_COL, (None, None))
+        out[fp] = {
+            "rows": rows, "bytes": sizes[fp], "seq_min": seq_min, "seq_max": seq_max,
+            "stats": {c: [_json_stat(v) for v in ranges[c]]
+                      for c in cols if c in ranges and ranges[c][0] is not None},
+        }
 
-def _footer_stats_spark_job(
-    files: list[str], seq_col: str, spark: "SparkSession", fs
-) -> dict[str, dict[str, Any]]:
-    """FS-agnostic per-file stats: one scan grouped by input file. Byte
-    sizes come from the FS listing (driver-side metadata calls)."""
+    locs = {fp: fs.pyarrow_path(fp) for fp in sizes}
+    if all(loc is not None for loc in locs.values()):
+        import pyarrow.parquet as pq
+
+        for fp, loc in locs.items():
+            md = pq.ParquetFile(loc).metadata
+            # top-level leaves only: a struct field's path is prefixed
+            # by its parent, so it never equals its bare name
+            top = {
+                md.schema.column(i).path: i for i in range(md.num_columns)
+                if md.schema.column(i).path == md.schema.column(i).name
+            }
+            ranges = {}
+            for c in want:
+                if c not in top:
+                    continue
+                lo = hi = None
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(top[c]).statistics
+                    if st is None or not st.has_min_max:
+                        lo = hi = None  # any stat-less row group → no bound
+                        break
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+                ranges[c] = (lo, hi)
+            put(fp, md.num_rows, ranges)
+        return out
+
+    from pyspark.sql.types import AtomicType
+
     from synapse_etl_jobs_spark.lake.fs import uri_norm as norm
 
-    by_norm = {norm(fp): fp for fp in files}
-    df = spark.read.parquet(*files)
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    has_seq = seq_col in df.columns
-    if has_seq:
-        aggs += [F.min(seq_col).alias("mn"), F.max(seq_col).alias("mx")]
-    rows = df.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
-    out: dict[str, dict[str, Any]] = {}
-    for r in rows:
+    by_norm = {norm(fp): fp for fp in sizes}
+    df = spark.read.parquet(*sizes)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    present = [c for c in want if isinstance(types.get(c), AtomicType)]
+    aggs = [F.count(F.lit(1)).alias("rows")] + [
+        a for i, c in enumerate(present)
+        for a in (F.min(c).alias(f"mn{i}"), F.max(c).alias(f"mx{i}"))
+    ]
+    for r in df.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect():
         fp = by_norm.get(norm(r["_f"]))
-        if fp is None:
-            continue
-        out[fp] = {
-            "rows": r["rows"], "bytes": fs.size(fp),
-            "seq_min": r["mn"] if has_seq else None,
-            "seq_max": r["mx"] if has_seq else None,
-        }
-    for fp in files:  # empty files produce no group
-        out.setdefault(
-            fp, {"rows": 0, "bytes": fs.size(fp), "seq_min": None, "seq_max": None}
-        )
+        if fp is not None:
+            put(fp, r["rows"], {c: (r[f"mn{i}"], r[f"mx{i}"])
+                                for i, c in enumerate(present)})
+    for fp in sizes:  # empty files produce no group
+        if fp not in out:
+            put(fp, 0, {})
     return out
 
 
@@ -205,80 +195,6 @@ def _json_stat(v: Any) -> Any:
     if hasattr(v, "item"):  # numpy scalar
         return v.item()
     return v.isoformat() if hasattr(v, "isoformat") else str(v)
-
-
-def _file_column_stats(
-    files: list[str], cols: list[str], spark: "SparkSession | None" = None,
-    fs=None,
-) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``cols`` straight from parquet footers —
-    the manifest-level column metrics Iceberg keeps per data file, the
-    read side of sort/Z-order clustering (``scan_range`` prunes whole
-    files against them). Same distribution policy as
-    ``_footer_stats_many``: driver loop for small file sets, one
-    parallelize job over the FILE LIST above the threshold."""
-    if not cols or not files:
-        return {}
-
-    def one(fp: str) -> dict[str, list]:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(fp).metadata
-        out: dict[str, list] = {}
-        for c in cols:
-            try:
-                idx = md.schema.names.index(c)
-            except ValueError:
-                continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    ok = False  # any stat-less row group → no file bound
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if ok and lo is not None:
-                out[c] = [_json_stat(lo), _json_stat(hi)]
-        return out
-
-    fs = fs or LocalFS()
-    locs = {fp: fs.pyarrow_path(fp) for fp in files}
-    if any(loc is None for loc in locs.values()):
-        # remote storage: one grouped scan instead of footer parses
-        from synapse_etl_jobs_spark.lake.fs import uri_norm as norm
-
-        by_norm = {norm(fp): fp for fp in files}
-        df = spark.read.parquet(*files)
-        present = [c for c in cols if c in df.columns]
-        if not present:
-            return {}
-        aggs = [
-            a for c in present
-            for a in (F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"))
-        ]
-        out: dict[str, dict[str, list]] = {}
-        for r in df.groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect():
-            fp = by_norm.get(norm(r["_f"]))
-            if fp is None:
-                continue
-            out[fp] = {
-                c: [_json_stat(r[f"mn_{c}"]), _json_stat(r[f"mx_{c}"])]
-                for c in present
-                if r[f"mn_{c}"] is not None
-            }
-        return out
-    if spark is not None and len(files) > _FOOTER_STATS_DISTRIBUTE_THRESHOLD:
-        sc = spark.sparkContext
-        slices = min(len(files), max(sc.defaultParallelism, 1))
-        pairs = list(locs.items())
-        return dict(
-            sc.parallelize(pairs, slices)
-            .map(lambda kv: (kv[0], one(kv[1])))
-            .collect()
-        )
-    return {fp: one(loc) for fp, loc in locs.items()}
 
 
 def _sum_stats(stats: "Iterable[dict[str, Any]]") -> dict[str, Any]:
@@ -420,9 +336,12 @@ class LakeTable:
         stats for those columns on EVERY merge commit (Iceberg
         column-metrics analog), so ``scan_range`` prunes freshly merged
         base files without waiting for a ``compact(sort_cols=...)`` /
-        ``compact(zorder_cols=...)`` rewrite. Free-ish: the footers are
-        already parsed for lineage; this reads a few more column chunks'
-        metadata, never data pages.
+        ``compact(zorder_cols=...)`` rewrite. Free-ish: the one footer
+        read that gives merge lineage its row counts and seq range also
+        yields these ranges (a few more column chunks' metadata, never
+        data pages; on remote storage the one grouped stats scan adds a
+        min/max per column). ``compact`` and ``rebucket`` read footers
+        only for these columns, so without ``stats_cols`` they read none.
 
         ``marker_retention_versions`` (opt-in): drop applied-batch
         markers recorded more than that many table versions ago at every
@@ -1095,6 +1014,36 @@ class LakeTable:
             StructType([current[c] for c in self.manifest.key_cols]), bits,
         )
 
+    def _written_entries(
+        self, written: dict[int, dict[str, int]], kind: str,
+        stat_cols: Sequence[str],
+        file_stats: "dict[str, dict[str, Any]] | None" = None,
+    ) -> dict[int, list[dict[str, Any]]]:
+        """Manifest entries ``{path, schema_id, kind, bloom?, stats?}``
+        per bucket for the files a commit just wrote (``written`` is their
+        ``_list_parquet_files`` listing). ``file_stats`` are the files'
+        ``_footer_stats`` when the caller already read them (merge needs
+        their row counts for lineage); otherwise the footers are read
+        here, and only when ``stat_cols`` asks for column ranges."""
+        if file_stats is None:
+            file_stats = (
+                _footer_stats(written, stat_cols, self.spark, self.fs)
+                if stat_cols else {}
+            )
+        blooms = self._file_blooms([fp for fps in written.values() for fp in fps])
+        out: dict[int, list[dict[str, Any]]] = {}
+        for b, fps in written.items():
+            out[b] = []
+            for fp in fps:
+                entry = {"path": fp, "schema_id": self.manifest.current_schema_id,
+                         "kind": kind}
+                if fp in blooms:
+                    entry["bloom"] = blooms[fp]
+                if file_stats.get(fp, {}).get("stats"):
+                    entry["stats"] = file_stats[fp]["stats"]
+                out[b].append(entry)
+        return out
+
     def lookup_keys(self, key_values: Sequence[tuple]) -> DataFrame:
         """Exact point lookup of full key tuples, with THREE pruning
         layers before any data is read — all driver-side, no Spark job
@@ -1364,10 +1313,12 @@ class LakeTable:
            it bucket-partitioned in one pass over the batch (one Spark
            job per shuffle stage under AQE; ≤ ``write_salt`` files per
            bucket for a large batch, one for a small one); affected
-           buckets, row counts, bytes, and the batch's seq range all
-           come from the written parquet FOOTERS — no second pass, no
-           caching of the batch (benched: persist of the deduped batch
-           cost more than the whole write);
+           buckets and byte sizes come from the listing of the written
+           files; row counts, the batch's seq range and ``stats_cols``
+           ranges from their parquet FOOTERS, each read once on the
+           driver (one grouped Spark scan on remote storage) — no second
+           pass, no caching of the batch (benched: persist of the
+           deduped batch cost more than the whole write);
         3. ``mor``: commit those files as deltas — done;
            ``cow``: second job joins stored files of the affected buckets
            with the staged files (plain parquet reads, no recompute) via
@@ -1534,13 +1485,13 @@ class LakeTable:
         self._salted_bucket_write(staged_df, stage_dir)
         staged = _list_parquet_files(stage_dir, self.fs)
 
-        # affected buckets + lineage stats from parquet footers; each
-        # staged footer is parsed ONCE (distributed above the file-count
-        # threshold) and reused by the commit loop below in mor mode
+        # affected buckets + lineage stats from the staged files' parquet
+        # footers, each read once; in mor mode the staged files are the
+        # commit's files, so the same read yields their stats_cols ranges
         affected = sorted(staged)
-        staged_file_stats = _footer_stats_many(
-            [fp for fps in staged.values() for fp in fps], SEQ_COL,
-            self.spark, self.fs,
+        stat_cols = list(m.props.get("stats_cols") or [])
+        staged_file_stats = _footer_stats(
+            staged, stat_cols if mode == "mor" else [], self.spark, self.fs
         )
         src_stats = _sum_stats(staged_file_stats.values())
 
@@ -1569,38 +1520,25 @@ class LakeTable:
         else:
             written = staged
 
-        # cow rewrites produce NEW files (≠ staged): batch-parse their
-        # footers the same way instead of one serial parse per file
+        # cow rewrites produce NEW files (≠ staged): one footer read of
+        # those gives their lineage rows and stats_cols ranges
         written_stats = (
             staged_file_stats
             if written is staged
-            else _footer_stats_many(
-                [fp for b in affected for fp in written.get(b, [])],
-                SEQ_COL, self.spark, self.fs,
-            )
+            else _footer_stats(written, stat_cols, self.spark, self.fs)
+        )
+        kind = "base" if mode == "cow" else "delta"
+        written_entries = self._written_entries(
+            written, kind, stat_cols, written_stats
         )
 
         new_buckets = dict(m.buckets)
-        kind = "base" if mode == "cow" else "delta"
-        blooms = self._file_blooms(
-            [fp for b in affected for fp in written.get(b, [])]
-        )
-        merge_stat_cols = list(m.props.get("stats_cols") or [])
-        col_stats = _file_column_stats(
-            [fp for b in affected for fp in written.get(b, [])],
-            merge_stat_cols, spark=self.spark, fs=self.fs,
-        )
         files_written, bytes_written, rows_written = 0, 0, 0
         lineage_rows = []
         for b in affected:
             entries = [] if mode == "cow" else list(m.buckets.get(str(b), []))
-            for fp in written.get(b, []):
-                entry = {"path": fp, "schema_id": m.current_schema_id, "kind": kind}
-                if fp in blooms:
-                    entry["bloom"] = blooms[fp]
-                if col_stats.get(fp):
-                    entry["stats"] = col_stats[fp]
-                entries.append(entry)
+            entries += written_entries.get(b, [])
+            for fp in written.get(b, {}):
                 fstats = written_stats[fp]
                 files_written += 1
                 rows_written += fstats["rows"]
@@ -2515,21 +2453,10 @@ class LakeTable:
                                   sort_cols=sort_cols, cluster=cluster,
                                   parts_by_bucket=parts_by_bucket)
         written = _list_parquet_files(commit_dir, self.fs)
-        new_files = [fp for b in victims for fp in written.get(b, [])]
-        blooms = self._file_blooms(new_files)
-        stat_cols = list(
-            zorder_cols or sort_cols or m.props.get("stats_cols") or []
+        my_entries = self._written_entries(
+            written, "base",
+            list(zorder_cols or sort_cols or m.props.get("stats_cols") or []),
         )
-        col_stats = _file_column_stats(new_files, stat_cols, spark=self.spark, fs=self.fs)
-        my_entries = {
-            b: [
-                {"path": fp, "schema_id": m.current_schema_id, "kind": "base",
-                 **({"bloom": blooms[fp]} if fp in blooms else {}),
-                 **({"stats": col_stats[fp]} if col_stats.get(fp) else {})}
-                for fp in written.get(b, [])
-            ]
-            for b in victims
-        }
 
         def build(base: Manifest) -> Manifest:
             # my rewritten base files replace EXACTLY the entries this
@@ -2543,7 +2470,7 @@ class LakeTable:
                     e for e in base.buckets.get(str(b), [])
                     if e["path"] not in read_paths[b]
                 ]
-                nb[str(b)] = my_entries[b] + rivals
+                nb[str(b)] = my_entries.get(b, []) + rivals
             return Manifest(
                 table_version=base.table_version + 1,
                 key_cols=base.key_cols,
@@ -2671,20 +2598,10 @@ class LakeTable:
             )
             shadow._salted_bucket_write(df, commit_dir)
             written = _list_parquet_files(commit_dir, self.fs)
-            new_files = [fp for fps in written.values() for fp in fps]
-            blooms = shadow._file_blooms(new_files)
-            col_stats = _file_column_stats(
-                new_files, list(m.props.get("stats_cols") or []),
-                spark=self.spark, fs=self.fs,
-            )
             new_manifest.buckets = {
-                str(b): [
-                    {"path": fp, "schema_id": m.current_schema_id, "kind": "base",
-                     **({"bloom": blooms[fp]} if fp in blooms else {}),
-                     **({"stats": col_stats[fp]} if col_stats.get(fp) else {})}
-                    for fp in fps
-                ]
-                for b, fps in written.items()
+                str(b): entries for b, entries in shadow._written_entries(
+                    written, "base", list(m.props.get("stats_cols") or [])
+                ).items()
             }
         self._commit_manifest(self.path, new_manifest, self.fs)
         self.manifest = new_manifest

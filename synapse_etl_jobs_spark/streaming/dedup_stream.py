@@ -228,8 +228,11 @@ def dedup_stream_into_table(
     # window stays crash-SAFE as before (commit order + redelivery) and
     # becomes INVISIBLE to consistent readers. A crash after the
     # commits but before the record is healed on redelivery (the no-op
-    # path re-records the now-current pair).
-    def _record_txn(spark, batch_id: int) -> None:
+    # path re-records the now-current pair, labelled
+    # ``meta["as_of"] = "redelivery"``: those versions are the tables'
+    # state when the batch was redelivered, which later commits may have
+    # moved past the batch's own commit point).
+    def _record_txn(spark, batch_id: int, redelivery: bool = False) -> None:
         from synapse_etl_jobs_spark.lake.txn import TxnLog
 
         log = TxnLog(txn_path, spark)
@@ -240,8 +243,10 @@ def dedup_stream_into_table(
         rec = log.latest()
         if rec is not None and rec["tables"] == versions:
             return
-        log.commit(versions,
-                   meta={"stream_id": stream_id, "batch_id": int(batch_id)})
+        meta = {"stream_id": stream_id, "batch_id": int(batch_id)}
+        if redelivery:
+            meta["as_of"] = "redelivery"
+        log.commit(versions, meta=meta)
 
     # index tables created with store_digests carry (_dg, _batch): the
     # probe verifies threshold-1.0 pairs off index rows alone (no
@@ -270,7 +275,7 @@ def dedup_stream_into_table(
             if txn_path is not None:
                 # heal a crash that landed both commits but lost the
                 # transaction record
-                _record_txn(batch_df.sparkSession, batch_id)
+                _record_txn(batch_df.sparkSession, batch_id, redelivery=True)
             return
         corpus = docs_table.read()
 

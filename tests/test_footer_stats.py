@@ -1,34 +1,16 @@
-"""Distributed footer-stat parity: the parallelize path must produce
-byte-identical stats to the driver loop (merge lineage depends on it)."""
+"""Footer stats of written files: lineage rows/seq range and the
+per-file ``stats_cols`` ranges come from ONE read of each footer, with
+columns matched on their full path in the parquet schema."""
 
 import pyspark.sql.functions as F
 from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.lake import LakeTable
-from synapse_etl_jobs_spark.lake.table import _footer_stats_many
-
-
-def test_distributed_footer_stats_match_driver(spark, tmp_path):
-    p = str(tmp_path / "p")
-    spark.range(5000).select(
-        F.col("id").alias("_seq"), (F.col("id") * 3).alias("x")
-    ).repartition(40).write.parquet(p)
-    import glob
-    files = sorted(glob.glob(p + "/*.parquet"))
-    assert len(files) == 40
-    driver = _footer_stats_many(files, "_seq", spark=None)
-    dist = _footer_stats_many(files, "_seq", spark=spark)  # 40 > threshold
-    assert dist == driver
-    total = sum(s["rows"] for s in dist.values())
-    assert total == 5000
-    lo = min(s["seq_min"] for s in dist.values())
-    hi = max(s["seq_max"] for s in dist.values())
-    assert (lo, hi) == (0, 4999)
 
 
 def test_merge_lineage_unchanged_with_many_files(spark, tmp_path, aqe_coalesce_off):
-    """A merge whose staged file count crosses the distribute threshold
-    still records correct lineage/source stats."""
+    """A merge writing many files per commit (64 at 16 buckets x salt
+    4) records correct lineage/source stats from their footers."""
     schema = StructType().add("k", "long").add("v", "string")
     t = LakeTable.create(
         spark, str(tmp_path / "t"), schema, ["k"], num_buckets=16, write_salt=4
@@ -38,10 +20,42 @@ def test_merge_lineage_unchanged_with_many_files(spark, tmp_path, aqe_coalesce_o
         F.col("id").alias("k"), F.col("id").cast("string").alias("v"),
     )
     s = t.merge(ev, batch_id=0)
-    assert s["files_written"] > 32  # the distributed path actually ran
+    assert s["files_written"] > 32  # many footers read in one commit
     assert s["source_events"] == 20000
     lin = t.lineage()
     assert lin.agg(F.sum("rows")).collect()[0][0] == 20000
     row = lin.select("seq_min", "seq_max").first()
     assert (row["seq_min"], row["seq_max"]) == (0, 19999)
     assert t.read().count() == 20000
+
+
+def test_nested_namesake_column_does_not_lend_its_stats(spark, tmp_path):
+    """A struct field named like a top-level column (``meta.lang`` vs
+    ``lang``, ``meta._seq`` vs ``_seq``) comes first among the parquet
+    leaves; stats must still be the top-level column's, or scan_range
+    prunes files holding in-range rows and lineage reports the wrong
+    seq range."""
+    meta = StructType().add("lang", "string").add("_seq", "long")
+    schema = StructType().add("k", "long").add("meta", meta).add("lang", "string")
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), schema, ["k"], num_buckets=1,
+        write_mode="cow", stats_cols=["lang"],
+    )
+    ev = spark.createDataFrame(
+        [(1, ("zz", 1000), "go", "UPSERT", 1),
+         (2, ("zz", 1000), "py", "UPSERT", 2),
+         (3, ("zz", 1000), "rb", "UPSERT", 3)],
+        "k long, meta struct<lang:string, _seq:long>, lang string, "
+        "op string, seq long",
+    )
+    t.merge(ev, batch_id=0)
+    entries = [e for lst in t.manifest.buckets.values() for e in lst]
+    assert [e["stats"] for e in entries] == [{"lang": ["go", "rb"]}]
+    row = t.lineage().select("seq_min", "seq_max").first()
+    assert (row["seq_min"], row["seq_max"]) == (1, 3)
+
+    got = sorted(r["k"] for r in t.scan_range({"lang": ("go", "py")}).collect())
+    want = sorted(
+        r["k"] for r in t.read().filter("lang between 'go' and 'py'").collect()
+    )
+    assert got == want == [1, 2]

@@ -164,31 +164,109 @@ def test_uri_table_cow_and_schema_evolution(spark):
     assert t3.read().collect()[0]["content"] == "v2"
 
 
+class _NoPyarrowFS:
+    """A filesystem without driver-side pyarrow paths (as hdfs:/s3a:):
+    ``_footer_stats`` then takes its grouped-scan branch."""
+
+    def pyarrow_path(self, path):
+        return None
+
+
+NESTED_SCHEMA = (
+    StructType().add("repo", "string").add("path", "string")
+    .add("meta", StructType().add("lang", "string").add("_seq", "long"))
+    .add("lang", "string").add("stars", "long")
+)
+
+
+def _nested_events(spark, rows):
+    return spark.createDataFrame(
+        rows, "repo string, path string, meta struct<lang:string, _seq:long>, "
+              "lang string, stars long, op string, seq long",
+    )
+
+
 def test_remote_stats_fallback_matches_footers(spark):
     """hdfs:/s3a: locations have no driver-side pyarrow path, so stats
-    fall back to one grouped Spark scan — pin that path against the
-    footer parses for the same files (file: URIs let both run)."""
-    from synapse_etl_jobs_spark.lake.table import (
-        SEQ_COL, _footer_stats, _footer_stats_spark_job,
-    )
+    come from one grouped Spark scan — pin that branch against the
+    footer branch for the same files (file: URIs let both run), stats
+    columns included, on a schema whose struct field shadows a
+    top-level column's leaf name."""
+    from synapse_etl_jobs_spark.lake.table import _footer_stats, _list_parquet_files
 
     path = "file:" + tempfile.mkdtemp(prefix="lake_uri_stats_") + "/t"
     t = LakeTable.create(
-        spark, path, _schema(), ["repo", "path", "commit"],
-        num_buckets=2, write_mode="mor",
+        spark, path, NESTED_SCHEMA, ["repo", "path"], num_buckets=2,
+        write_mode="mor",
     )
-    t.merge(_events(spark, [
-        ("r1", "a.py", "c1", "py", "x", "UPSERT", 5),
-        ("r1", "b.py", "c1", "py", "y", "UPSERT", 6),
-        ("r2", "a.py", "c1", "py", "z", "UPSERT", 7),
+    t.merge(_nested_events(spark, [
+        ("r1", "a.py", ("zz", 900), "go", 3, "UPSERT", 5),
+        ("r1", "b.py", ("zz", 900), "py", 1, "UPSERT", 6),
+        ("r2", "a.py", ("aa", 900), "rb", 8, "UPSERT", 7),
     ]), stream_id="s", batch_id=0)
-    fs = t.fs
-    files = [e["path"] for lst in t.manifest.buckets.values() for e in lst]
+    listing = _list_parquet_files(os.path.join(path, "data"), t.fs)
+    files = [fp for fps in listing.values() for fp in fps]
     assert files and all(f.startswith("file:") for f in files)
-    via_job = _footer_stats_spark_job(files, SEQ_COL, spark, fs)
-    for fp in files:
-        via_footer = _footer_stats([fs.pyarrow_path(fp)], SEQ_COL)
-        assert via_job[fp]["rows"] == via_footer["rows"]
-        assert via_job[fp]["seq_min"] == via_footer["seq_min"]
-        assert via_job[fp]["seq_max"] == via_footer["seq_max"]
-        assert via_job[fp]["bytes"] == via_footer["bytes"]
+    cols = ["lang", "stars", "repo"]
+    via_footer = _footer_stats(listing, cols, spark, t.fs)
+    via_scan = _footer_stats(listing, cols, spark, _NoPyarrowFS())
+    assert via_scan == via_footer
+    assert sorted(via_footer) == sorted(files)
+    assert sum(s["rows"] for s in via_footer.values()) == 3
+    assert min(s["seq_min"] for s in via_footer.values()) == 5
+    assert max(s["seq_max"] for s in via_footer.values()) == 7
+    langs = sorted(v for s in via_footer.values() for v in s["stats"]["lang"])
+    assert langs[0] == "go" and langs[-1] == "rb"
+    for fp, s in via_footer.items():
+        assert s["bytes"] == t.fs.size(fp)
+
+
+def test_remote_merge_runs_one_stats_scan(spark, monkeypatch):
+    """A merge on remote storage reads its written files' rows, seq range
+    and stats_cols ranges in ONE grouped scan (not one for lineage and
+    another for the column stats): it runs exactly the stats-scan jobs
+    of a single ``_footer_stats`` call over the same files."""
+    import inspect
+
+    from synapse_etl_jobs_spark.lake import table as table_mod
+
+    path = "file:" + tempfile.mkdtemp(prefix="lake_uri_scan_") + "/t"
+    t = LakeTable.create(
+        spark, path, NESTED_SCHEMA, ["repo", "path"], num_buckets=2,
+        write_mode="mor", stats_cols=["lang", "stars"],
+    )
+    monkeypatch.setattr(HadoopFS, "pyarrow_path", lambda self, p: None)
+    sc = spark.sparkContext
+    lines, first = inspect.getsourcelines(table_mod._footer_stats)
+    reader = range(first, first + len(lines))
+
+    def stats_scan_jobs(group, fn):
+        """Jobs ``fn`` runs from a collect inside ``_footer_stats``."""
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        jobs = {}
+        for j in st.getJobIdsForGroup(group):
+            for sid in st.getJobInfo(j).stageIds:
+                name = st.getStageInfo(sid).name
+                if name.startswith("collect at ") and table_mod.__file__ in name:
+                    jobs[j] = int(name.rsplit(":", 1)[1])
+        assert set(jobs.values()) <= set(reader), jobs
+        return len(jobs)
+
+    tag = os.path.basename(os.path.dirname(path))
+    in_merge = stats_scan_jobs(f"merge-{tag}", lambda: t.merge(_nested_events(spark, [
+        ("r1", "a.py", ("zz", 900), "go", 3, "UPSERT", 5),
+        ("r2", "b.py", ("zz", 900), "py", 1, "UPSERT", 6),
+    ]), stream_id="s", batch_id=0))
+    listing = table_mod._list_parquet_files(os.path.join(path, "data"), t.fs)
+    one_scan = stats_scan_jobs(f"scan-{tag}", lambda: table_mod._footer_stats(
+        listing, ["lang", "stars"], spark, t.fs))
+    assert in_merge == one_scan > 0
+    langs = sorted(v for lst in t.manifest.buckets.values() for e in lst
+                   for v in e["stats"]["lang"])
+    assert langs[0] == "go" and langs[-1] == "py"

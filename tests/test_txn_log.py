@@ -134,3 +134,44 @@ def test_crash_between_commits_is_invisible_to_txn_readers(spark, tmp_path):
     assert sorted(r["doc_id"] for r in pinned[docs.path].read().collect()) \
         == [1, 2, 4]
     assert pinned[index.path].read().count() == 3 * LSH["bands"]
+
+
+def test_heal_record_is_labelled_as_of_redelivery(spark, tmp_path, monkeypatch):
+    """A crash after both commits of a batch landed but before its
+    transaction record: redelivery takes the already-applied path, which
+    re-records the tables' current versions and labels the record
+    ``as_of: redelivery`` rather than passing it off as the commit point."""
+    docs, index = create_dedup_tables(
+        spark, str(tmp_path / "docs"), str(tmp_path / "ix"), DOC_SCHEMA,
+        num_buckets=4,
+    )
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    txn = str(tmp_path / "txn")
+    spark.createDataFrame(B1, DOC_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(src)
+
+    real_commit = TxnLog.commit
+    calls = []
+
+    def commit_crashes_once(self, tables, meta=None):
+        calls.append(dict(meta or {}))
+        if len(calls) == 1:
+            raise RuntimeError("injected crash before the txn record")
+        return real_commit(self, tables, meta)
+
+    monkeypatch.setattr(TxnLog, "commit", commit_crashes_once)
+    with pytest.raises(Exception):
+        _run(spark, docs, index, src, ckpt, txn)
+    assert TxnLog(txn).latest() is None
+    docs2 = LakeTable.load(spark, docs.path)
+    ix2 = LakeTable.load(spark, index.path)
+    # both commits of the batch landed before the crash
+    assert docs2.is_batch_applied("dedup", 0) and ix2.is_batch_applied("dedup", 0)
+    pair = {docs.path: docs2.manifest.table_version,
+            index.path: ix2.manifest.table_version}
+
+    _run(spark, docs2, ix2, src, ckpt, txn)
+    rec = TxnLog(txn).latest()
+    assert rec["tables"] == pair
+    assert rec["meta"]["as_of"] == "redelivery"
+    assert "as_of" not in calls[0]
