@@ -16,11 +16,20 @@ Design:
   trick as the write salt) while staying bit-reproducible OFFLINE via
   the pure-Python xxhash64 port (sources/lake_datasource.py), so probe
   membership is checked on the driver with zero Spark work.
-- the filter is built by ONE column-pruned Spark job over the freshly
-  written files (key columns only — no payload re-read): each row
-  explodes to its 3 (word, bit) coordinates and a ``bit_or`` aggregate
-  per (file, word) assembles the bitmap; wire volume is at most
-  #files x m/64 longs regardless of batch size.
+- the filter is built INSIDE the bucketed write, with no job of its
+  own: the written frame is wrapped in ``DataFrame.observe`` with one
+  ``bitmap_construct_agg`` per (hash function, 32,768-bit chunk) of
+  the table-wide index ``_bucket·m + position``, so the write's own
+  tasks set the bits and the driver receives k × ⌈num_buckets·m/32768⌉
+  bitmaps of 4 KiB when the write ends. The driver ORs them and cuts
+  bucket b's bloom out of bits ``[b·m, (b+1)·m)`` by integer shifting
+  (m need not be a multiple of 64 or 8). Observed metrics reject
+  ``FILTER (WHERE …)`` clauses, so each chunk selects its positions
+  with ``CASE WHEN``.
+- every file a commit writes into bucket b carries the bloom of ALL the
+  rows that commit wrote into b — with one file per bucket (the usual
+  small-commit shape) that is exactly the file's bloom; with several it
+  is their union, which can only add false positives.
 - false positives only ever cost a wasted file read; false negatives
   cannot happen, so pruning is always safe. An over-full file degrades
   to an all-ones bloom that simply never prunes. Files written before
@@ -31,22 +40,26 @@ positives; the default (``point_index_bits=8192`` => 1 KiB per file) is
 sized for the sandbox's file sizes — at 100 TB scale the knob grows
 with the target file size (Iceberg's default NDV sizing reasons the
 same way) and the blobs move out of the JSON manifest into sidecar
-files, same lifecycle.
+files, same lifecycle. The observed aggregates grow with
+num_buckets·m: 64 buckets at 8192 bits are 48 bitmaps (192 KiB per
+write task).
 """
 
 from __future__ import annotations
 
 import base64
 import struct
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.sources.lake_datasource import spark_xxhash64
 
 BLOOM_K = 3
+# positions per bitmap_construct_agg bitmap (Spark's fixed 4 KiB bitmap)
+CHUNK_BITS = 32768
 
 
 def _position_cols(key_cols: list[str], bits: int) -> list:
@@ -57,49 +70,57 @@ def _position_cols(key_cols: list[str], bits: int) -> list:
     ]
 
 
-def compute_file_blooms(
-    spark: SparkSession, files: list[str], key_schema: StructType, bits: int
-) -> dict[str, dict[str, Any]]:
-    """One Spark job: per-file bloom bitmaps over the key columns
-    (``key_schema``'s fields, in order) of the given parquet files.
-    Returns ``{path: {"bits": m, "k": K, "b64": ...}}``. The read is given
-    the key schema, so no schema-inference job over the footers runs."""
-    if not files or bits <= 0:
-        return {}
-    key_cols = key_schema.fieldNames()
-    n_words = (bits + 63) // 64
-    rows = (
-        spark.read.schema(key_schema).parquet(*files)
-        .select(F.input_file_name().alias("_f"), *key_cols)
-        .select("_f", F.explode(F.array(*_position_cols(key_cols, bits))).alias("_p"))
-        .select(
-            "_f",
-            F.expr("_p div 64").alias("_w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(_p % 64 AS INT))").alias("_m"),
-        )
-        .groupBy("_f", "_w")
-        .agg(F.expr("bit_or(_m)").alias("_bits"))
-        .collect()
-    )
-    # key results by the CALLER's path spelling (manifest entries may be
-    # URIs — input_file_name normalizes differently per scheme)
-    from synapse_etl_jobs_spark.lake.fs import uri_norm as norm
+def observe_bucket_blooms(
+    df: DataFrame, bucket: Column, key_cols: list[str], bits: int,
+    num_buckets: int,
+) -> tuple[DataFrame, Callable[[], dict[int, dict[str, Any]]]]:
+    """Wrap ``df`` so the action that consumes it also builds one key
+    bloom per bucket (``bucket`` is the row's bucket id in
+    ``[0, num_buckets)``). Returns the observed frame and a function to
+    call AFTER that action: ``{bucket: {"bits", "k", "b64"}}`` for every
+    bucket that received a row."""
+    n_chunks = -(-num_buckets * bits // CHUNK_BITS)
+    # the k table-wide indexes are projected once per row: inlined into
+    # every chunk's CASE they would hash the keys k × n_chunks times
+    idx_cols = [f"_bloom_idx{i}" for i in range(BLOOM_K)]
+    df = df.select("*", *[
+        (bucket.cast("long") * bits + pos).alias(name)
+        for name, pos in zip(idx_cols, _position_cols(key_cols, bits))
+    ])
+    aggs, chunk_of = [], {}
+    for i, name in enumerate(idx_cols):
+        idx = F.col(name)
+        for c in range(n_chunks):
+            lo = c * CHUNK_BITS
+            chunk_of[f"c{c}_h{i}"] = c
+            aggs.append(F.bitmap_construct_agg(F.bitmap_bit_position(
+                F.when((idx >= lo) & (idx < lo + CHUNK_BITS), idx - lo + 1)
+            )).alias(f"c{c}_h{i}"))
+    obs = Observation()
+    observed = df.observe(obs, *aggs).drop(*idx_cols)
 
-    by_norm = {norm(fp): fp for fp in files}
-    words: dict[str, list[int]] = {}
-    for r in rows:
-        path = by_norm.get(norm(r["_f"]))
-        if path is None:
-            continue
-        words.setdefault(path, [0] * n_words)[int(r["_w"])] = int(r["_bits"])
-    return {
-        p: {
-            "bits": bits,
-            "k": BLOOM_K,
-            "b64": base64.b64encode(struct.pack(f"<{n_words}q", *w)).decode(),
-        }
-        for p, w in words.items()
-    }
+    def blooms() -> dict[int, dict[str, Any]]:
+        chunks = [0] * n_chunks
+        for name, bitmap in obs.get.items():
+            chunks[chunk_of[name]] |= int.from_bytes(bitmap, "little")
+        n_bytes = (bits + 63) // 64 * 8
+        out = {}
+        for b in range(num_buckets):
+            start = b * bits
+            c0, c1 = start // CHUNK_BITS, (start + bits - 1) // CHUNK_BITS
+            v = 0
+            for c in range(c1, c0 - 1, -1):
+                v = (v << CHUNK_BITS) | chunks[c]
+            v = (v >> (start - c0 * CHUNK_BITS)) & ((1 << bits) - 1)
+            if v:
+                out[b] = {
+                    "bits": bits,
+                    "k": BLOOM_K,
+                    "b64": base64.b64encode(v.to_bytes(n_bytes, "little")).decode(),
+                }
+        return out
+
+    return observed, blooms
 
 
 def key_positions(

@@ -34,8 +34,9 @@ def uri_norm(p: str) -> str:
     (Spark may render ``file:///x`` where the manifest says ``file:/x``
     or a bare ``/x``). Percent-encoding is unquoted; the authority is
     dropped (hosted ``file://host/x`` URIs are not produced by this
-    engine). Shared by the footer-stats and bloom matching sites — they
-    MUST agree on which files matched."""
+    engine). Used by the remote footer-stats scan, which groups by
+    ``input_file_name()``; blooms are built inside the write and never
+    match paths."""
     from urllib.parse import unquote, urlparse
 
     return unquote(urlparse(p).path)

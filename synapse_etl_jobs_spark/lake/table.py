@@ -41,13 +41,14 @@ from collections.abc import Iterable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.lake.fs import LocalFS, filesystem_for
 from synapse_etl_jobs_spark.operators.dedup import (
-    dedup_lww, dedup_lww_salted, dedup_lww_semijoin,
+    dedup_lww, dedup_lww_salted, dedup_lww_semijoin, lww_residual,
+    semijoin_candidates,
 )
 
 class ConcurrentWriteError(RuntimeError):
@@ -104,7 +105,7 @@ def _list_parquet_files(root: str, fs=None) -> dict[int, dict[str, int]]:
 
 def _footer_stats(
     listing: dict[int, dict[str, int]], cols: Sequence[str],
-    spark: "SparkSession", fs,
+    schema: StructType, spark: "SparkSession", fs,
 ) -> dict[str, dict[str, Any]]:
     """Per-file stats of the files in a ``_list_parquet_files`` listing,
     each file read once: ``rows``, ``bytes`` (the listing's size),
@@ -119,7 +120,8 @@ def _footer_stats(
     aggregates the same values from the data pages. Columns are matched
     on the column chunk's full ``path_in_schema``, so a struct field
     sharing a top-level column's name (``meta.lang`` vs ``lang``) never
-    lends it its range.
+    lends it its range. ``schema`` is the files' physical schema: the
+    scan is given it, so no schema-inference job runs first.
     """
     sizes = {fp: sz for fps in listing.values() for fp, sz in fps.items()}
     want = list(dict.fromkeys([SEQ_COL, *cols]))
@@ -166,8 +168,8 @@ def _footer_stats(
     from synapse_etl_jobs_spark.lake.fs import uri_norm as norm
 
     by_norm = {norm(fp): fp for fp in sizes}
-    df = spark.read.parquet(*sizes)
-    types = {f.name: f.dataType for f in df.schema.fields}
+    df = spark.read.schema(schema).parquet(*sizes)
+    types = {f.name: f.dataType for f in schema.fields}
     present = [c for c in want if isinstance(types.get(c), AtomicType)]
     aggs = [F.count(F.lit(1)).alias("rows")] + [
         a for i, c in enumerate(present)
@@ -312,8 +314,11 @@ class LakeTable:
         (keys + payload; no internal columns). ``bucket_cols`` defaults to
         the first key column — the ``bucket(N, repo)`` spec of the north
         rule: co-locates a repo's rows so point-in-repo merges prune to
-        one bucket. ``write_mode``: 'cow' (read-optimized) or 'mor'
-        (ingest-optimized; see ``merge``).
+        one bucket. ``bucket_cols`` must be key columns: merge, compact
+        and reads rely on all versions of a key living in one bucket
+        (``ValueError`` otherwise, as in ``rebucket``). ``write_mode``:
+        'cow' (read-optimized) or 'mor' (ingest-optimized; see
+        ``merge``).
 
         ``write_salt`` splits each bucket's rows over that many writer
         tasks (salted on the key hash — bucket ASSIGNMENT is untouched,
@@ -327,10 +332,12 @@ class LakeTable:
         write shuffle. ``compact()`` folds them.
 
         ``point_index_bits`` (opt-in) attaches a per-file key bloom
-        filter of that many bits to every data file written by merge and
-        compact — ``lookup_keys`` then skips files that cannot contain a
-        probed key (see lake/bloom.py). Costs one column-pruned re-read
-        of each batch's key columns at write time.
+        filter of that many bits to every data file written by merge,
+        compact and rebucket — ``lookup_keys`` then skips files that
+        cannot contain a probed key (see lake/bloom.py). Built inside
+        the write itself (observed metrics over the rows being written),
+        so it costs no extra Spark job or re-read; every file a commit
+        writes into a bucket carries that bucket's bloom.
 
         ``stats_cols`` (opt-in) records per-file [min, max] manifest
         stats for those columns on EVERY merge commit (Iceberg
@@ -369,6 +376,9 @@ class LakeTable:
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"unknown write mode: {write_mode}")
         bucket_cols = list(bucket_cols or key_cols[:1])
+        bad = [c for c in bucket_cols if c not in key_cols]
+        if bad:
+            raise ValueError(f"bucket columns must be key columns: {bad}")
         fs = filesystem_for(path, spark)
         if fs.exists(cls._manifest_dir(path)):
             raise FileExistsError(cls._manifest_dir(path))
@@ -541,19 +551,52 @@ class LakeTable:
         cols = [F.col(c) for c in self.manifest.bucket_cols]
         return F.pmod(F.xxhash64(*cols), F.lit(self.manifest.num_buckets)).cast("int")
 
+    def _write_partitioning(self) -> list[Column]:
+        """The expressions the default bucketed write repartitions on:
+        ``_bucket`` and, when ``write_salt`` > 1, the salt — both
+        functions of the key columns. ``merge`` groups its residual LWW
+        reduce by these same expressions, so the write's repartition is
+        planned away (see ``operators.dedup.lww_residual``)."""
+        salt = max(int(self.manifest.props.get("write_salt", 1)), 1)
+        if salt == 1:
+            return [F.col(BUCKET_COL)]
+        # the salt MUST be decorrelated from the bucket hash: bucket =
+        # pmod(xxhash64(bucket_cols), num_buckets), and for single-key
+        # tables bucket_cols == key_cols, so pmod(xxhash64(key_cols),
+        # salt) would be a pure function of the bucket whenever salt
+        # divides num_buckets — every row of a bucket landing on ONE
+        # salt value, silently disabling the straggler defusal. A
+        # literal seed element makes the two hashes independent.
+        return [
+            F.col(BUCKET_COL),
+            F.pmod(
+                F.xxhash64(F.lit("write-salt"),
+                           *[F.col(k) for k in self.manifest.key_cols]),
+                F.lit(salt),
+            ),
+        ]
+
     def _salted_bucket_write(self, df: DataFrame, out_dir: str, min_tasks: int = 1,
                              sort_cols: "Sequence[str] | None" = None,
                              cluster: "tuple[Column, int] | None" = None,
-                             parts_by_bucket: "dict[int, int] | None" = None) -> None:
+                             parts_by_bucket: "dict[int, int] | None" = None,
+                             bloom: bool = False) -> dict[int, dict[str, Any]]:
         """Write ``df`` hive-partitioned by ``_bucket``, shuffled on
         (bucket, salt) with salt = key hash in ``[0, write_salt)`` —
         defuses hot-bucket write stragglers without touching bucket
         assignment or merge keys. The default shape repartitions by
-        column WITHOUT a count, so AQE coalesces the shuffle to the
-        session's advisory partition size: a large write keeps the
-        salt's split (≤ ``write_salt`` files per bucket), a small one
-        collapses to one file per touched bucket instead of
-        ``num_buckets × write_salt`` tiny files.
+        column WITHOUT a count (``_write_partitioning``), so AQE
+        coalesces the shuffle to the session's advisory partition size:
+        a large write keeps the salt's split (≤ ``write_salt`` files per
+        bucket), a small one collapses to one file per touched bucket
+        instead of ``num_buckets × write_salt`` tiny files. A frame that
+        is already partitioned that way (``merge``'s fused reduce) is
+        not shuffled again.
+
+        ``bloom`` on a table with ``point_index_bits`` builds each
+        written bucket's key bloom inside this write (observed metrics,
+        no extra job — see lake/bloom.py) and returns ``{bucket:
+        bloom}``; otherwise returns ``{}``.
 
         ``parts_by_bucket`` (binpack rewrites) overrides the uniform
         salt with a PER-BUCKET file-count target: bucket b's rows are
@@ -565,6 +608,14 @@ class LakeTable:
         clustered and binpack shapes keep explicit slot counts: their
         file counts are the point of the rewrite."""
         salt = max(int(self.manifest.props.get("write_salt", 1)), 1)
+        bits = int(self.manifest.props.get("point_index_bits") or 0) if bloom else 0
+        if bits:
+            from synapse_etl_jobs_spark.lake.bloom import observe_bucket_blooms
+
+            df, blooms = observe_bucket_blooms(
+                df, F.col(BUCKET_COL), self.manifest.key_cols, bits,
+                self.manifest.num_buckets,
+            )
         if parts_by_bucket:
             # shared by the clustered and key-hash binpack shapes below:
             # per-bucket target file count as a map literal, and a slot
@@ -636,43 +687,26 @@ class LakeTable:
             df = df.sortWithinPartitions(
                 BUCKET_COL, "_zcode", *list(sort_cols or [])
             ).drop("_zcode")
-            df.write.partitionBy(BUCKET_COL).parquet(out_dir)
-            return
-        if parts_by_bucket:
+        elif parts_by_bucket:
             group_col = F.pmod(
                 key_hash, F.element_at(binpack_groups, F.col(BUCKET_COL))
             )
             df = df.repartition(binpack_slots, F.col(BUCKET_COL), group_col)
             if sort_cols:
                 df = df.sortWithinPartitions(BUCKET_COL, *sort_cols)
-            df.write.partitionBy(BUCKET_COL).parquet(out_dir)
-            return
-        if salt > 1:
-            # the salt MUST be decorrelated from the bucket hash: bucket =
-            # pmod(xxhash64(bucket_cols), num_buckets), and for single-key
-            # tables bucket_cols == key_cols, so pmod(xxhash64(key_cols),
-            # salt) would be a pure function of the bucket whenever salt
-            # divides num_buckets — every row of a bucket landing on ONE
-            # salt value, silently disabling the straggler defusal. A
-            # literal seed element makes the two hashes independent.
-            salt_col = F.pmod(
-                F.xxhash64(F.lit("write-salt"),
-                           *[F.col(k) for k in self.manifest.key_cols]),
-                F.lit(salt),
-            )
-            df = df.repartition(F.col(BUCKET_COL), salt_col)
         else:
-            df = df.repartition(F.col(BUCKET_COL))
-        if sort_cols:
-            # range-cluster each output file: parquet row-group min/max
-            # stats on the sort columns become selective, so range
-            # predicates skip row groups at scan time (Z-order's 1-D
-            # case). The partition column must lead the sort: the
-            # partitionBy writer re-sorts any task whose rows aren't
-            # already ordered by it (not stably — which would undo the
-            # clustering)
-            df = df.sortWithinPartitions(BUCKET_COL, *sort_cols)
+            df = df.repartition(*self._write_partitioning())
+            if sort_cols:
+                # range-cluster each output file: parquet row-group
+                # min/max stats on the sort columns become selective, so
+                # range predicates skip row groups at scan time (Z-order's
+                # 1-D case). The partition column must lead the sort: the
+                # partitionBy writer re-sorts any task whose rows aren't
+                # already ordered by it (not stably — which would undo the
+                # clustering)
+                df = df.sortWithinPartitions(BUCKET_COL, *sort_cols)
         df.write.partitionBy(BUCKET_COL).parquet(out_dir)
+        return blooms() if bits else {}
 
     @property
     def _patch_enabled(self) -> bool:
@@ -999,50 +1033,47 @@ class LakeTable:
             return self.spark.createDataFrame([], empty_schema)
         return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(*INTERNAL_COLS)
 
-    def _file_blooms(self, files: list[str]) -> dict[str, dict[str, Any]]:
-        """Per-file key blooms for freshly written files, when the table
-        opted in (``point_index_bits``); empty dict otherwise."""
-        bits = int(self.manifest.props.get("point_index_bits", 0) or 0)
-        if not bits or not files:
-            return {}
-        from synapse_etl_jobs_spark.lake.bloom import compute_file_blooms
-
-        # the files were just written under the current schema
-        current = self.manifest.current_schema()
-        return compute_file_blooms(
-            self.spark, files,
-            StructType([current[c] for c in self.manifest.key_cols]), bits,
-        )
-
     def _written_entries(
         self, written: dict[int, dict[str, int]], kind: str,
         stat_cols: Sequence[str],
         file_stats: "dict[str, dict[str, Any]] | None" = None,
+        blooms: "dict[int, dict[str, Any]] | None" = None,
     ) -> dict[int, list[dict[str, Any]]]:
         """Manifest entries ``{path, schema_id, kind, bloom?, stats?}``
         per bucket for the files a commit just wrote (``written`` is their
         ``_list_parquet_files`` listing). ``file_stats`` are the files'
         ``_footer_stats`` when the caller already read them (merge needs
         their row counts for lineage); otherwise the footers are read
-        here, and only when ``stat_cols`` asks for column ranges."""
+        here, and only when ``stat_cols`` asks for column ranges.
+        ``blooms`` are the per-bucket blooms ``_salted_bucket_write``
+        built: every file of bucket b carries b's."""
         if file_stats is None:
             file_stats = (
-                _footer_stats(written, stat_cols, self.spark, self.fs)
-                if stat_cols else {}
+                self._written_stats(written, stat_cols) if stat_cols else {}
             )
-        blooms = self._file_blooms([fp for fps in written.values() for fp in fps])
+        blooms = blooms or {}
         out: dict[int, list[dict[str, Any]]] = {}
         for b, fps in written.items():
             out[b] = []
             for fp in fps:
                 entry = {"path": fp, "schema_id": self.manifest.current_schema_id,
                          "kind": kind}
-                if fp in blooms:
-                    entry["bloom"] = blooms[fp]
+                if b in blooms:
+                    entry["bloom"] = blooms[b]
                 if file_stats.get(fp, {}).get("stats"):
                     entry["stats"] = file_stats[fp]["stats"]
                 out[b].append(entry)
         return out
+
+    def _written_stats(
+        self, written: dict[int, dict[str, int]], cols: Sequence[str]
+    ) -> dict[str, dict[str, Any]]:
+        """``_footer_stats`` of files this table just wrote, which carry
+        the current schema plus the internal columns."""
+        return _footer_stats(
+            written, cols, self._stored_schema(self.manifest.current_schema_id),
+            self.spark, self.fs,
+        )
 
     def lookup_keys(self, key_values: Sequence[tuple]) -> DataFrame:
         """Exact point lookup of full key tuples, with THREE pruning
@@ -1312,13 +1343,17 @@ class LakeTable:
         2. LWW-reduce the batch (salted two-phase if requested) and write
            it bucket-partitioned in one pass over the batch (one Spark
            job per shuffle stage under AQE; ≤ ``write_salt`` files per
-           bucket for a large batch, one for a small one); affected
-           buckets and byte sizes come from the listing of the written
-           files; row counts, the batch's seq range and ``stats_cols``
-           ranges from their parquet FOOTERS, each read once on the
-           driver (one grouped Spark scan on remote storage) — no second
-           pass, no caching of the batch (benched: persist of the
-           deduped batch cost more than the whole write);
+           bucket for a large batch, one for a small one). The default
+           semijoin reduce runs its residual aggregate over the write's
+           own (bucket, salt) shuffle, so the reduced rows cross one
+           shuffle, not two; the key blooms of ``point_index_bits`` are
+           built by the same write. Affected buckets and byte sizes come
+           from the listing of the written files; row counts, the
+           batch's seq range and ``stats_cols`` ranges from their parquet
+           FOOTERS, each read once on the driver (one grouped Spark scan
+           on remote storage) — no second pass, no caching of the batch
+           (benched: persist of the deduped batch cost more than the
+           whole write);
         3. ``mor``: commit those files as deltas — done;
            ``cow``: second job joins stored files of the affected buckets
            with the staged files (plain parquet reads, no recompute) via
@@ -1440,6 +1475,21 @@ class LakeTable:
         # to uphold; a duplicate key would produce duplicate stored rows.
         if pre_reduced:
             pass
+        elif (dedup_strategy == "semijoin" and not salt_buckets
+              and not carries_patch_state
+              and set(m.bucket_cols) <= set(m.key_cols)):
+            # the residual reduce runs over the bucketed write's own
+            # (bucket, salt) shuffle, grouped by those expressions too,
+            # so the write adds no second full-row shuffle. Exact:
+            # bucket and salt are functions of the key, so every row of
+            # a key still meets in one group.
+            batch = lww_residual(
+                semijoin_candidates(
+                    batch.withColumn(BUCKET_COL, self._bucket_expr()),
+                    m.key_cols, SEQ_COL,
+                ),
+                [BUCKET_COL, *m.key_cols], SEQ_COL, self._write_partitioning(),
+            )
         else:
             # a patch-state batch (changelog replication of a patch-mode
             # source) can carry two versions of a key at the SAME max
@@ -1467,11 +1517,11 @@ class LakeTable:
                 batch = dedup_lww(reduce_in, m.key_cols, SEQ_COL, strategy=dedup_strategy)
             if orig is not None:
                 batch = batch.select(*orig)
-        staged_df = (
-            batch.withColumn(BUCKET_COL, self._bucket_expr())
-            .withColumn(DELETED_COL, F.col(OP_COL).isin(*DELETE_OPS))
-            .drop(OP_COL)
-        )
+        if BUCKET_COL not in batch.columns:
+            batch = batch.withColumn(BUCKET_COL, self._bucket_expr())
+        staged_df = batch.withColumn(
+            DELETED_COL, F.col(OP_COL).isin(*DELETE_OPS)
+        ).drop(OP_COL)
 
         new_version = m.table_version + 1
         commit_dir = os.path.join(
@@ -1482,7 +1532,7 @@ class LakeTable:
             if mode == "mor"
             else os.path.join(self.path, "_staging", f"s{uuid.uuid4().hex[:8]}")
         )
-        self._salted_bucket_write(staged_df, stage_dir)
+        blooms = self._salted_bucket_write(staged_df, stage_dir, bloom=mode == "mor")
         staged = _list_parquet_files(stage_dir, self.fs)
 
         # affected buckets + lineage stats from the staged files' parquet
@@ -1490,8 +1540,8 @@ class LakeTable:
         # commit's files, so the same read yields their stats_cols ranges
         affected = sorted(staged)
         stat_cols = list(m.props.get("stats_cols") or [])
-        staged_file_stats = _footer_stats(
-            staged, stat_cols if mode == "mor" else [], self.spark, self.fs
+        staged_file_stats = self._written_stats(
+            staged, stat_cols if mode == "mor" else []
         )
         src_stats = _sum_stats(staged_file_stats.values())
 
@@ -1511,7 +1561,7 @@ class LakeTable:
                 merged = self._lww_stored(combined).withColumn(
                     BUCKET_COL, self._bucket_expr()
                 )
-                self._salted_bucket_write(merged, commit_dir)
+                blooms = self._salted_bucket_write(merged, commit_dir, bloom=True)
                 written = _list_parquet_files(commit_dir, self.fs)
             except BaseException:
                 # a failed fold must not orphan the multi-GB staging dir
@@ -1525,11 +1575,11 @@ class LakeTable:
         written_stats = (
             staged_file_stats
             if written is staged
-            else _footer_stats(written, stat_cols, self.spark, self.fs)
+            else self._written_stats(written, stat_cols)
         )
         kind = "base" if mode == "cow" else "delta"
         written_entries = self._written_entries(
-            written, kind, stat_cols, written_stats
+            written, kind, stat_cols, written_stats, blooms
         )
 
         new_buckets = dict(m.buckets)
@@ -2449,13 +2499,15 @@ class LakeTable:
         commit_dir = os.path.join(
             self.path, "data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}"
         )
-        self._salted_bucket_write(df, commit_dir, min_tasks=len(victims),
-                                  sort_cols=sort_cols, cluster=cluster,
-                                  parts_by_bucket=parts_by_bucket)
+        blooms = self._salted_bucket_write(
+            df, commit_dir, min_tasks=len(victims), sort_cols=sort_cols,
+            cluster=cluster, parts_by_bucket=parts_by_bucket, bloom=True,
+        )
         written = _list_parquet_files(commit_dir, self.fs)
         my_entries = self._written_entries(
             written, "base",
             list(zorder_cols or sort_cols or m.props.get("stats_cols") or []),
+            blooms=blooms,
         )
 
         def build(base: Manifest) -> Manifest:
@@ -2596,11 +2648,12 @@ class LakeTable:
             commit_dir = os.path.join(
                 self.path, "data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}"
             )
-            shadow._salted_bucket_write(df, commit_dir)
+            blooms = shadow._salted_bucket_write(df, commit_dir, bloom=True)
             written = _list_parquet_files(commit_dir, self.fs)
             new_manifest.buckets = {
                 str(b): entries for b, entries in shadow._written_entries(
-                    written, "base", list(m.props.get("stats_cols") or [])
+                    written, "base", list(m.props.get("stats_cols") or []),
+                    blooms=blooms,
                 ).items()
             }
         self._commit_manifest(self.path, new_manifest, self.fs)

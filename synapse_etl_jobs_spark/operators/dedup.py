@@ -25,7 +25,10 @@ output (equivalence is asserted in tests):
     winner list — broadcast by default, so the full-width pass is
     shuffle-free — then a residual max(struct) over the candidates
     (≤ duplicate-delivery copies per key) to collapse exact re-deliveries
-    with identical tie-breaking to ``"agg"``.
+    with identical tie-breaking to ``"agg"``. ``LakeTable.merge`` runs
+    that residual over its bucketed write's (bucket, salt) shuffle
+    (``lww_residual(partition_by=...)``), so the reduced rows are
+    shuffled once, not once to reduce and again to write.
     Exactness: the winner row always matches its own (keys, max-seq)
     entry, so it is always pulled; any other pulled row has seq ≤ max and
     loses the residual aggregate. Benched on a 16M-event batch
@@ -50,7 +53,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -163,6 +166,23 @@ def dedup_lww_semijoin(
     aggregate. False positives cost a few spare rows in the residual
     aggregate, never a wrong winner.
     """
+    cand = semijoin_candidates(
+        df, keys, seq_col, broadcast=broadcast, join_on_hash=join_on_hash
+    )
+    return lww_residual(cand, keys, seq_col)
+
+
+def semijoin_candidates(
+    df: DataFrame,
+    keys: Sequence[str],
+    seq_col: str,
+    *,
+    broadcast: bool = True,
+    join_on_hash: bool = True,
+) -> DataFrame:
+    """The rows of ``df`` that ``dedup_lww_semijoin`` hands its residual
+    aggregate: pass 1's (keys, max-seq) winner list semi-joined back to
+    the full rows. Same columns as ``df``."""
     # max(seq) ignores nulls, so a key whose EVERY seq is null gets a
     # null winner entry; join equality on seq must therefore be
     # null-safe (<=>), or such keys would silently vanish — the "agg"
@@ -175,27 +195,48 @@ def dedup_lww_semijoin(
         if broadcast:
             build = F.broadcast(build)
         probe = df.withColumn("_kh", kh)
-        cand = probe.join(
+        return probe.join(
             build,
             (probe["_kh"] == build["_kh"])
             & probe[seq_col].eqNullSafe(build["_mseq"]),
             "leftsemi",
         ).drop("_kh")
-    else:
-        build = mx.select(
-            *[F.col(k).alias(f"_b_{k}") for k in keys],
-            F.col(seq_col).alias("_mseq"),
-        )
-        if broadcast:
-            build = F.broadcast(build)
-        cond = df[seq_col].eqNullSafe(build["_mseq"])
-        for k in keys:
-            cond = cond & df[k].eqNullSafe(build[f"_b_{k}"])
-        cand = df.join(build, cond, "leftsemi")
-    payload = _payload_cols(df, keys)
-    uo = _unorderable_payload(df, payload)
-    out = cand.groupBy(*keys).agg(_lww_agg(payload, seq_col, uo))
-    return out.select(*keys, *_top_cols(df, payload, uo))
+    build = mx.select(
+        *[F.col(k).alias(f"_b_{k}") for k in keys],
+        F.col(seq_col).alias("_mseq"),
+    )
+    if broadcast:
+        build = F.broadcast(build)
+    cond = df[seq_col].eqNullSafe(build["_mseq"])
+    for k in keys:
+        cond = cond & df[k].eqNullSafe(build[f"_b_{k}"])
+    return df.join(build, cond, "leftsemi")
+
+
+def lww_residual(
+    cand: DataFrame,
+    keys: Sequence[str],
+    seq_col: str,
+    partition_by: Sequence[Column] = (),
+) -> DataFrame:
+    """The residual ``max(struct)`` per key over ``semijoin_candidates``.
+
+    ``partition_by`` fuses the reduce into a following
+    ``repartition(*partition_by)``: the candidates are repartitioned on
+    those expressions and grouped by them next to the keys, so the
+    reduce's output is already hash-partitioned on them and the planner
+    drops the later repartition (EnsureRequirements removes a
+    REPARTITION_BY_COL exchange whose child has the same partitioning) —
+    one full-row shuffle instead of two. Exact only when every
+    expression is a function of ``keys``: a key's rows then all meet in
+    one group."""
+    payload = _payload_cols(cand, keys)
+    uo = _unorderable_payload(cand, payload)
+    if partition_by:
+        cand = cand.repartition(*partition_by)
+    group = [*keys, *[p.alias(f"_part{i}") for i, p in enumerate(partition_by)]]
+    out = cand.groupBy(*group).agg(_lww_agg(payload, seq_col, uo))
+    return out.select(*keys, *_top_cols(cand, payload, uo))
 
 
 def dedup_lww_salted(

@@ -157,16 +157,27 @@ class ReplayDriver:
         # can assign an event to the adjacent window, which the lo/hi loop
         # below (exact integer arithmetic) would then skip as empty —
         # silent data loss with a marker still committed.
-        nonempty = {
-            int(r[0])
-            for r in events.filter(
-                (F.col(self.seq_col) >= seq_start) & (F.col(self.seq_col) < seq_end)
+        # A range inside ONE window (a tailing loop's poll) only needs to
+        # know whether any event falls in it: limit(1) stops at the first
+        # row — one job when the first scanned partition holds one —
+        # instead of a distinct over every event (two jobs).
+        in_range = events.filter(
+            (F.col(self.seq_col) >= seq_start) & (F.col(self.seq_col) < seq_end)
+        )
+        first_w, end_w = seq_start // b, (seq_end + b - 1) // b
+        if end_w - first_w == 1:
+            nonempty = (
+                {first_w} if in_range.select(self.seq_col).limit(1).collect()
+                else set()
             )
-            .select(window_id(self.seq_col, b).alias("w"))
-            .distinct()
-            .collect()
-        }
-        for batch_id in range(seq_start // b, (seq_end + b - 1) // b):
+        else:
+            nonempty = {
+                int(r[0])
+                for r in in_range.select(window_id(self.seq_col, b).alias("w"))
+                .distinct()
+                .collect()
+            }
+        for batch_id in range(first_w, end_w):
             lo, hi = batch_id * b, (batch_id + 1) * b
             if batch_id not in nonempty:
                 stats.append({"applied": False, "batch_id": batch_id,

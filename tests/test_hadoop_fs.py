@@ -208,8 +208,9 @@ def test_remote_stats_fallback_matches_footers(spark):
     files = [fp for fps in listing.values() for fp in fps]
     assert files and all(f.startswith("file:") for f in files)
     cols = ["lang", "stars", "repo"]
-    via_footer = _footer_stats(listing, cols, spark, t.fs)
-    via_scan = _footer_stats(listing, cols, spark, _NoPyarrowFS())
+    schema = t._stored_schema(t.manifest.current_schema_id)
+    via_footer = _footer_stats(listing, cols, schema, spark, t.fs)
+    via_scan = _footer_stats(listing, cols, schema, spark, _NoPyarrowFS())
     assert via_scan == via_footer
     assert sorted(via_footer) == sorted(files)
     assert sum(s["rows"] for s in via_footer.values()) == 3
@@ -225,7 +226,9 @@ def test_remote_merge_runs_one_stats_scan(spark, monkeypatch):
     """A merge on remote storage reads its written files' rows, seq range
     and stats_cols ranges in ONE grouped scan (not one for lineage and
     another for the column stats): it runs exactly the stats-scan jobs
-    of a single ``_footer_stats`` call over the same files."""
+    of a single ``_footer_stats`` call over the same files, and no
+    schema-inference job ahead of it (the written files' schema is
+    known)."""
     import inspect
 
     from synapse_etl_jobs_spark.lake import table as table_mod
@@ -253,6 +256,7 @@ def test_remote_merge_runs_one_stats_scan(spark, monkeypatch):
         for j in st.getJobIdsForGroup(group):
             for sid in st.getJobInfo(j).stageIds:
                 name = st.getStageInfo(sid).name
+                assert not name.startswith("parquet at "), name  # inference
                 if name.startswith("collect at ") and table_mod.__file__ in name:
                     jobs[j] = int(name.rsplit(":", 1)[1])
         assert set(jobs.values()) <= set(reader), jobs
@@ -265,7 +269,7 @@ def test_remote_merge_runs_one_stats_scan(spark, monkeypatch):
     ]), stream_id="s", batch_id=0))
     listing = table_mod._list_parquet_files(os.path.join(path, "data"), t.fs)
     one_scan = stats_scan_jobs(f"scan-{tag}", lambda: table_mod._footer_stats(
-        listing, ["lang", "stars"], spark, t.fs))
+        listing, ["lang", "stars"], t._stored_schema(0), spark, t.fs))
     assert in_merge == one_scan > 0
     langs = sorted(v for lst in t.manifest.buckets.values() for e in lst
                    for v in e["stats"]["lang"])

@@ -512,6 +512,28 @@ def test_sparse_seq_replay_skips_empty_windows(spark, tmp_table_path):
     assert t.manifest.table_version == 2  # one commit per NON-empty window
     assert t.read().count() == 2
 
+    # ranges inside ONE window take the single-window probe: an empty
+    # window commits nothing, a non-empty one commits once
+    t2 = LakeTable.create(spark, tmp_table_path + "_w", SCHEMA, KEYS, num_buckets=2)
+    drv = ReplayDriver(t2, batch_events=1000)
+    assert drv.replay(ev, seq_start=1000, seq_end=2000) == [
+        {"applied": False, "batch_id": 1, "reason": "empty_window"}]
+    assert t2.manifest.table_version == 0
+    (s,) = drv.replay(ev, seq_start=10_000_000, seq_end=10_001_000)
+    assert s["applied"] and s["batch_id"] == 10_000
+    assert t2.manifest.table_version == 1
+    assert [r["path"] for r in t2.read().collect()] == ["b.py"]
+
+
+def test_create_rejects_non_key_bucket_cols(spark, tmp_table_path):
+    """All versions of a key must share one bucket, so bucket columns
+    must be key columns — create checks it as rebucket does."""
+    import os
+
+    with pytest.raises(ValueError, match="bucket columns must be key columns"):
+        LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, bucket_cols=["lang"])
+    assert not os.path.exists(tmp_table_path)
+
 
 def test_vacuum_reclaims_orphaned_staging(spark, tmp_table_path):
     import os

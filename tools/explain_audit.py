@@ -140,6 +140,74 @@ def _semijoin_plan_check(spark, sf_dir):
     return "dedup_lww_semijoin", txt, problems
 
 
+def _fused_merge_reduce_check(spark, sf_dir):
+    """merge's default LWW reduce is fused into its bucketed write: the
+    semijoin fragments above hold, and the ONLY Exchange that moves full
+    rows is the write's ``hashpartitioning(_bucket, salt)`` under the
+    residual aggregate — no key-hash exchange between that aggregate and
+    its candidates, and the write's own repartition planned away.
+    Checked on the physical tree (AQE off, so exchanges are plain
+    nodes): every shuffle outside the broadcast winner list moves the
+    candidates' full rows (or their partial aggregates)."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from synapse_etl_jobs_spark.lake.table import BUCKET_COL, LakeTable
+    from synapse_etl_jobs_spark.operators.dedup import (
+        lww_residual, semijoin_candidates,
+    )
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        F.col("user_id"), F.col("event_id").alias("seq"),
+        F.col("event_type"), F.col("value"),
+    )
+    tmp = tempfile.mkdtemp(prefix="fused_reduce_")
+    t = LakeTable.create(
+        spark, tmp + "/t",
+        StructType([ev.schema[c] for c in ("user_id", "event_type", "value")]),
+        ["user_id"], num_buckets=16, write_mode="mor",
+    )
+    shutil.rmtree(tmp)  # only the table handle's spec is needed
+    def fused():
+        # the shape merge builds, then the default bucketed write's
+        # repartition
+        part = t._write_partitioning()
+        return lww_residual(
+            semijoin_candidates(ev.withColumn(BUCKET_COL, t._bucket_expr()),
+                                ["user_id"], "seq"),
+            [BUCKET_COL, "user_id"], "seq", part,
+        ).repartition(*part)
+
+    txt = plan_text(fused())
+    required = ["partial_max(seq", "BroadcastHashJoin", "LeftSemi",
+                "hashpartitioning(_bucket"]
+    forbidden = ["SortMergeJoin", "BatchEvalPython"]
+    problems = [f"MISSING required plan fragment: {s!r}" for s in required if s not in txt]
+    problems += [f"FORBIDDEN plan fragment present: {s!r}" for s in forbidden if s in txt]
+    # a frame built with AQE off plans exchanges as plain tree nodes
+    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        nodes = _jnodes(fused()._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+    full_row = [
+        n.outputPartitioning().toString() for n in nodes
+        if n.nodeName() == "Exchange"
+        and not any(n.equals(m) for b in nodes if b.nodeName() == "BroadcastExchange"
+                    for m in _jnodes(b))
+    ]
+    if len(full_row) != 1 or not full_row[0].startswith("hashpartitioning(_bucket"):
+        problems.append(
+            f"expected one full-row Exchange on hashpartitioning(_bucket, ...), "
+            f"got {full_row}"
+        )
+    return "merge_fused_reduce", txt, problems
+
+
 def _patch_collapse_check(spark, sf_dir):
     """The partial-update collapse must be ONE hash-partitioned
     aggregation with map-side partials (per-column max(struct) under
@@ -399,6 +467,7 @@ def main() -> None:
         problems += [f"FORBIDDEN plan fragment present: {s!r}" for s in forbidden if s in txt]
         results.append((name, txt, problems))
     results.append(_semijoin_plan_check(spark, sf_dir))
+    results.append(_fused_merge_reduce_check(spark, sf_dir))
     results.append(_patch_collapse_check(spark, sf_dir))
     results.append(_index_probe_plan_check(spark, sf_dir))
     results.append(_tfidf_reuse_check(spark, sf_dir))
