@@ -47,8 +47,7 @@ from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.lake.fs import LocalFS, filesystem_for
 from synapse_etl_jobs_spark.operators.dedup import (
-    dedup_lww, dedup_lww_salted, dedup_lww_semijoin, lww_residual,
-    semijoin_candidates,
+    dedup_lww, dedup_lww_salted, lww_residual, semijoin_candidates,
 )
 
 class ConcurrentWriteError(RuntimeError):
@@ -59,7 +58,6 @@ class ConcurrentWriteError(RuntimeError):
 
 
 SEQ_COL = "_seq"  # stored event-sequence column (LWW tiebreaker, replay idempotency)
-OP_COL = "_op"
 DELETED_COL = "_deleted"  # stored tombstone flag — see merge() docstring
 BUCKET_COL = "_bucket"
 DELETE_OPS = ("DELETE",)  # ops that remove the key; anything else upserts
@@ -1337,34 +1335,39 @@ class LakeTable:
         Default comes from the table property ``write_mode`` (set at
         ``create``), falling back to ``cow``.
 
-        Execution (both modes):
+        Execution:
 
         1. idempotency gate — a batch_id already recorded is a no-op;
-        2. LWW-reduce the batch (salted two-phase if requested) and write
-           it bucket-partitioned in one pass over the batch (one Spark
-           job per shuffle stage under AQE; ≤ ``write_salt`` files per
-           bucket for a large batch, one for a small one). The default
-           semijoin reduce runs its residual aggregate over the write's
-           own (bucket, salt) shuffle, so the reduced rows cross one
-           shuffle, not two; the key blooms of ``point_index_bits`` are
-           built by the same write. Affected buckets and byte sizes come
-           from the listing of the written files; row counts, the
+        2. ``mor``: LWW-reduce the batch (salted two-phase if requested)
+           and write it bucket-partitioned in one pass over the batch
+           (one Spark job per shuffle stage under AQE; ≤ ``write_salt``
+           files per bucket for a large batch, one for a small one). The
+           default semijoin reduce runs its residual aggregate over the
+           write's own (bucket, salt) shuffle, so the reduced rows cross
+           one shuffle, not two; the key blooms of ``point_index_bits``
+           are built by the same write. Affected buckets and byte sizes
+           come from the listing of the written files; row counts, the
            batch's seq range and ``stats_cols`` ranges from their parquet
            FOOTERS, each read once on the driver (one grouped Spark scan
            on remote storage) — no second pass, no caching of the batch
            (benched: persist of the deduped batch cost more than the
-           whole write);
-        3. ``mor``: commit those files as deltas — done;
-           ``cow``: second job joins stored files of the affected buckets
-           with the staged files (plain parquet reads, no recompute) via
-           LWW dedup and rewrites those buckets as base files. Replayed
-           stale events lose to stored rows, so re-merge of any suffix is
+           whole write). Commit those files as deltas — done;
+        3. ``cow``: a keys-only aggregate over the batch yields the
+           affected buckets and lineage counts; ONE LWW reduce over those
+           buckets' stored files and the raw batch rows then rewrites
+           them as base files (``dedup_strategy``, ``salt_buckets`` and
+           ``pre_reduced`` shape only the MoR reduce). Replayed stale
+           events lose to stored rows, so re-merge of any suffix is
            idempotent even WITHOUT the batch marker (the marker is an
-           optimization, not a correctness crutch);
+           optimization, not a correctness crutch). A failed fold's
+           files stay unreferenced until ``vacuum`` reclaims them;
         4. DELETE winners are kept as TOMBSTONES (``_deleted=true``,
            hidden from reads): without them, a stale pre-delete update
            merged later would resurrect the key — tombstones make merge
-           fully order-insensitive. ``compact()`` garbage-collects them;
+           fully order-insensitive. ``compact()`` garbage-collects them.
+           Every reduce orders a key's rows by (``_seq``, payload,
+           ``_deleted``), so a DELETE tied with an upsert on seq and
+           payload wins however the two are batched;
         5. commit the manifest atomically.
 
         Returns stats for lineage/metrics.
@@ -1373,6 +1376,8 @@ class LakeTable:
         mode = mode or m.props.get("write_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown write mode: {mode}")
+        if dedup_strategy not in ("agg", "semijoin"):
+            raise ValueError(f"unknown dedup strategy: {dedup_strategy}")
         if batch_id is not None and self.is_batch_applied(stream_id, batch_id):
             return {"applied": False, "reason": "batch_already_applied",
                     "table_version": m.table_version}
@@ -1442,7 +1447,9 @@ class LakeTable:
         current_schema = m.current_schema()
         user_cols = [f.name for f in current_schema.fields]
 
-        # normalize the batch to (user columns + _op + _seq)
+        # normalize the batch to the stored shape (_read_files' column
+        # order): user columns, _seq, _deleted from op, and a patch-state
+        # batch's _cseq/_fold — so every LWW reduce breaks ties alike
         batch = updates.select(
             *[
                 (F.col(c) if c in updates.columns else F.lit(None)).cast(
@@ -1450,8 +1457,8 @@ class LakeTable:
                 ).alias(c)
                 for c in user_cols
             ],
-            F.upper(F.col(op_col)).alias(OP_COL),
             F.col(seq_col).cast("long").alias(SEQ_COL),
+            F.upper(F.col(op_col)).isin(*DELETE_OPS).alias(DELETED_COL),
             *(
                 [
                     F.col(CSEQ_COL).cast("map<string,long>").alias(CSEQ_COL),
@@ -1462,18 +1469,19 @@ class LakeTable:
             ),
         )
 
-        # (2) reduce the batch to one winner per key, tombstone-flag it,
-        # and write it bucket-partitioned. Default "semijoin" keeps wide
-        # payloads out of the aggregate (HashAgg winner list + broadcast
-        # semi join — benched ~2x over the one-pass sort-aggregate and
-        # skew-immune via map-side partial agg); "agg" (+ optional
-        # salt_buckets) is the single-pass fallback for batches whose
-        # per-batch winner list is too large to broadcast. Callers that
-        # ALREADY hold one row per key (merge_patches' collapse, a
-        # pre-aggregated compaction fold) pass pre_reduced=True to skip
-        # the reduction shuffle entirely — the contract is the caller's
-        # to uphold; a duplicate key would produce duplicate stored rows.
-        if pre_reduced:
+        # (2) mor: reduce the batch to one winner per key (cow skips
+        # this: its fold reduces the raw batch). Default "semijoin" keeps
+        # wide payloads out of the aggregate (HashAgg winner list +
+        # broadcast semi join — benched ~2x over the one-pass
+        # sort-aggregate and skew-immune via map-side partial agg); "agg"
+        # (+ optional salt_buckets) is the single-pass fallback for
+        # batches whose per-batch winner list is too large to broadcast.
+        # Callers that ALREADY hold one row per key (merge_patches'
+        # collapse, a pre-aggregated compaction fold) pass
+        # pre_reduced=True to skip the reduction shuffle entirely — the
+        # contract is the caller's to uphold; a duplicate key would
+        # produce duplicate stored rows.
+        if mode == "cow" or pre_reduced:
             pass
         elif (dedup_strategy == "semijoin" and not salt_buckets
               and not carries_patch_state
@@ -1511,72 +1519,57 @@ class LakeTable:
                 )
             if salt_buckets:
                 batch = dedup_lww_salted(reduce_in, m.key_cols, SEQ_COL, salt_buckets)
-            elif dedup_strategy == "semijoin":
-                batch = dedup_lww_semijoin(reduce_in, m.key_cols, SEQ_COL)
             else:
                 batch = dedup_lww(reduce_in, m.key_cols, SEQ_COL, strategy=dedup_strategy)
             if orig is not None:
                 batch = batch.select(*orig)
-        if BUCKET_COL not in batch.columns:
-            batch = batch.withColumn(BUCKET_COL, self._bucket_expr())
-        staged_df = batch.withColumn(
-            DELETED_COL, F.col(OP_COL).isin(*DELETE_OPS)
-        ).drop(OP_COL)
 
         new_version = m.table_version + 1
         commit_dir = os.path.join(
             self.path, "data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}"
         )
-        stage_dir = (
-            commit_dir
-            if mode == "mor"
-            else os.path.join(self.path, "_staging", f"s{uuid.uuid4().hex[:8]}")
-        )
-        blooms = self._salted_bucket_write(staged_df, stage_dir, bloom=mode == "mor")
-        staged = _list_parquet_files(stage_dir, self.fs)
-
-        # affected buckets + lineage stats from the staged files' parquet
-        # footers, each read once; in mor mode the staged files are the
-        # commit's files, so the same read yields their stats_cols ranges
-        affected = sorted(staged)
         stat_cols = list(m.props.get("stats_cols") or [])
-        staged_file_stats = self._written_stats(
-            staged, stat_cols if mode == "mor" else []
-        )
-        src_stats = _sum_stats(staged_file_stats.values())
-
-        if mode == "cow" and affected:
-            # second job: fold staged deltas into the affected buckets'
-            # stored files — pure parquet reads, no recompute of the batch
-            staged_entries = [
-                {"path": fp, "schema_id": m.current_schema_id, "kind": "delta"}
-                for fps in staged.values()
-                for fp in fps
-            ]
-            stored_entries = [
-                e for b in affected for e in m.buckets.get(str(b), [])
-            ]
-            try:
-                combined = self._read_files(stored_entries + staged_entries)
+        blooms = {}
+        if mode == "cow":
+            # (2) keys-only pass over one shuffle: the affected buckets,
+            # their winner counts and the winners' seq range (lineage)
+            per_bucket = (
+                batch.select(*m.key_cols, SEQ_COL)
+                .withColumn(BUCKET_COL, self._bucket_expr())
+                .repartition(BUCKET_COL)
+                .groupBy(BUCKET_COL, *m.key_cols).agg(F.max(SEQ_COL).alias(SEQ_COL))
+                .groupBy(BUCKET_COL)
+                .agg(F.count(F.lit(1)).alias("rows"),
+                     F.min(SEQ_COL).alias("seq_min"), F.max(SEQ_COL).alias("seq_max"))
+                .collect()
+            )
+            affected = sorted(r[BUCKET_COL] for r in per_bucket)
+            src_stats = _sum_stats(dict(r.asDict(), bytes=0) for r in per_bucket)
+            # (3) one LWW over the affected buckets' stored rows and the
+            # raw batch; max(struct) collapses hot keys map-side
+            if affected:
+                stored = self._read_files(
+                    [e for b in affected for e in m.buckets.get(str(b), [])]
+                )
+                combined = (
+                    batch if stored is None
+                    else stored.unionByName(batch, allowMissingColumns=True)
+                )
                 merged = self._lww_stored(combined).withColumn(
                     BUCKET_COL, self._bucket_expr()
                 )
                 blooms = self._salted_bucket_write(merged, commit_dir, bloom=True)
-                written = _list_parquet_files(commit_dir, self.fs)
-            except BaseException:
-                # a failed fold must not orphan the multi-GB staging dir
-                self.fs.delete(stage_dir)
-                raise
         else:
-            written = staged
-
-        # cow rewrites produce NEW files (≠ staged): one footer read of
-        # those gives their lineage rows and stats_cols ranges
-        written_stats = (
-            staged_file_stats
-            if written is staged
-            else self._written_stats(written, stat_cols)
-        )
+            if BUCKET_COL not in batch.columns:
+                batch = batch.withColumn(BUCKET_COL, self._bucket_expr())
+            blooms = self._salted_bucket_write(batch, commit_dir, bloom=True)
+        written = _list_parquet_files(commit_dir, self.fs)
+        written_stats = self._written_stats(written, stat_cols)
+        if mode == "mor":
+            # the deltas are the batch's winners: their listing and
+            # footers give the affected buckets and lineage stats
+            affected = sorted(written)
+            src_stats = _sum_stats(written_stats.values())
         kind = "base" if mode == "cow" else "delta"
         written_entries = self._written_entries(
             written, kind, stat_cols, written_stats, blooms
@@ -1609,8 +1602,6 @@ class LakeTable:
                         }
                     )
             new_buckets[str(b)] = entries  # empty list = bucket fully deleted
-        if mode == "cow" and stage_dir != commit_dir:
-            self.fs.delete(stage_dir)
 
         applied = {k: dict(v) for k, v in m.applied_batches.items()}
         if batch_id is not None:
@@ -1697,7 +1688,8 @@ class LakeTable:
         4. feed the now-FULL rows through the normal ``merge`` path
            (same tombstones, batch markers, lineage, CoW/MoR modes) with
            ``pre_reduced=True`` — steps 1+3 already guarantee one row per
-           key, so merge's own LWW shuffle is skipped.
+           key, so a MoR merge skips its LWW shuffle (a CoW fold reduces
+           the rows with the stored ones anyway).
 
         Ordering: batch application is ORDER-INSENSITIVE. Each stored row
         carries per-column CRDT state — ``_cseq`` (column name → seq of
@@ -2872,9 +2864,9 @@ class LakeTable:
             if os.path.basename(sp) not in kept_refs and _aged(sp):
                 self.fs.delete(sp)
                 deleted_side += 1
-        # failed CoW merges may leave orphaned staging dirs; reclaim them
-        # (a CONCURRENT CoW merge's staging is live — grace_seconds
-        # shields it, same rule as the data files above)
+        # tables written by earlier versions, whose CoW merges staged
+        # the reduced batch under _staging/, may hold orphaned staging
+        # dirs; reclaim them (grace_seconds applies as for data files)
         staging_root = os.path.join(self.path, "_staging")
         for d in self.fs.list_dirs(staging_root):
             if _aged(d):

@@ -79,6 +79,9 @@ class ReplayDriver:
         (forwarded verbatim to ``compact()``, e.g. ``sort_cols`` /
         ``target_file_mb`` / an explicit ``drop_tombstones=True``).
 
+        ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
+        table's batch reduce (see ``LakeTable.merge``).
+
         ``vacuum_every=K`` schedules the OTHER growth term's maintenance:
         the manifest version chain and the dead data files it pins grow
         one commit per batch (plus one per compaction) forever —
@@ -260,6 +263,8 @@ def stream_into_table(
 
     ``trigger_once`` runs one availableNow pass (the scheduled-batch shape
     the reference uses); set False for continuous micro-batches.
+    ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
+    table's batch reduce (see ``LakeTable.merge``).
 
     ``compact_every=K`` compacts the table after every K APPLIED
     micro-batches (redelivered batches that marker-short-circuit don't

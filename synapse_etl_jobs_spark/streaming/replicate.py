@@ -145,7 +145,8 @@ def replicate_stream(
     wrapper). ``trigger_once=False`` returns the running continuous
     query. ``max_versions_per_trigger`` bounds catch-up batches
     (backpressure); ``merge_kwargs`` forward to the replica's ``merge``
-    (e.g. ``salt_buckets`` for a hot-key replica).
+    (e.g. ``salt_buckets`` for a hot-key merge-on-read replica; a
+    copy-on-write replica's fold ignores it).
 
     ``where`` filters the changelog before it is applied — a PARTIAL
     replica (fan-out routing: one firehose table into per-language /

@@ -10,7 +10,13 @@ from synapse_etl_jobs_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    # Job-count tests read stage names back from the status store. Past
+    # spark.ui.retainedStages (default 1000) the store evicts stages
+    # oldest-completion first, and a stage a later job reuses is
+    # rewritten as SKIPPED with no completion time, so it goes first —
+    # even while its job's test is reading it. Keep every stage.
+    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.ui.retainedStages": "1000000"})
     yield s
 
 

@@ -123,6 +123,111 @@ def test_small_batch_writes_one_file_per_bucket(spark, tmp_table_path, mode):
     assert t.read().count() == 2000
 
 
+def test_small_cow_merge_runs_five_jobs_without_staging(spark, tmp_table_path):
+    """A CoW merge folds the raw batch into the touched buckets: a
+    keys-only pass (shuffle, collect), then the fold (reduce shuffle,
+    write shuffle, write) — at most 5 jobs, and nothing staged."""
+    import os
+
+    t = LakeTable.create(
+        spark, tmp_table_path, StructType().add("k", "long").add("v", "string"),
+        ["k"], num_buckets=4, write_mode="cow", write_salt=4,
+    )
+
+    def batch(n, seq0):
+        return spark.range(n).select(
+            F.lit("UPSERT").alias("op"), (F.col("id") + seq0).alias("seq"),
+            F.col("id").alias("k"), F.col("id").cast("string").alias("v"),
+        )
+
+    t.merge(batch(100, 0), batch_id=0)  # warm the session
+    sc = spark.sparkContext
+    group = f"cow-merge-{os.path.basename(os.path.dirname(tmp_table_path))}"
+    sc.setJobGroup(group, group)
+    try:
+        t.merge(batch(200, 1000), batch_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s).name for j in jobs for s in st.getJobInfo(j).stageIds]
+    assert 0 < len(jobs) <= 5, stages
+    assert not os.path.exists(os.path.join(tmp_table_path, "_staging"))
+    assert t.read().count() == 200
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_equal_seq_delete_wins_however_batched(spark, tmp_table_path, mode):
+    """One tie rule for every LWW reduce: a DELETE and an upsert with the
+    same seq and payload leave the key deleted, whether they arrive in
+    one batch (UPDATE+DELETE, CREATE+DELETE) or in two (U then D, D then
+    U), on both write modes."""
+    t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=2,
+                         write_mode=mode)
+    ddl = ("op string, seq long, repo string, path string, commit string, "
+           "lang string, content string")
+
+    def ev(op, key):
+        return (op, 5, "r", key, "c", "python", "same")
+
+    t.merge(spark.createDataFrame([
+        ev("UPDATE", "ud"), ev("DELETE", "ud"),
+        ev("CREATE", "cd"), ev("DELETE", "cd"),
+        ev("UPDATE", "u_then_d"), ev("DELETE", "d_then_u"),
+        ev("UPDATE", "live"),
+    ], ddl), batch_id=0)
+    t.merge(spark.createDataFrame(
+        [ev("DELETE", "u_then_d"), ev("UPDATE", "d_then_u")], ddl), batch_id=1)
+    assert [r["path"] for r in t.read().collect()] == ["live"]
+    probes = [("r", p, "c") for p in ("ud", "cd", "u_then_d", "d_then_u", "live")]
+    assert [r["path"] for r in t.lookup_keys(probes).collect()] == ["live"]
+
+
+def test_failed_cow_fold_leaves_table_unchanged(spark, tmp_table_path, monkeypatch):
+    """A CoW fold that fails after writing commits nothing: the version
+    and the snapshot are unchanged, and vacuum reclaims every file the
+    failed merge wrote."""
+    import glob
+    import os
+
+    t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=2)
+    ddl = ("op string, seq long, repo string, path string, commit string, "
+           "lang string, content string")
+    t.merge(spark.createDataFrame(
+        [("INSERT", 1, "r", f"p{i}", "c", "python", "v1") for i in range(20)], ddl
+    ), batch_id=0)
+    version, before = t.manifest.table_version, sorted(t.read().collect())
+
+    def files():
+        return set(glob.glob(os.path.join(tmp_table_path, "data", "**", "*.parquet"),
+                             recursive=True))
+
+    kept = files()
+    real_write = LakeTable._salted_bucket_write
+
+    def write_then_fail(self, *args, **kwargs):
+        real_write(self, *args, **kwargs)
+        raise RuntimeError("injected fold failure")
+
+    monkeypatch.setattr(LakeTable, "_salted_bucket_write", write_then_fail)
+    update = spark.createDataFrame(
+        [("UPDATE", 2, "r", f"p{i}", "c", "python", "v2") for i in range(20)], ddl
+    )
+    with pytest.raises(RuntimeError, match="injected fold failure"):
+        t.merge(update, batch_id=1)
+    monkeypatch.undo()
+    assert files() > kept  # the failed merge did write
+    assert t.manifest.table_version == version
+    reloaded = LakeTable.load(spark, tmp_table_path)
+    assert reloaded.manifest.table_version == version
+    assert sorted(reloaded.read().collect()) == before
+    assert not reloaded.is_batch_applied("default", 1)
+    reloaded.vacuum(grace_seconds=0)
+    assert files() == kept
+    assert sorted(reloaded.read().collect()) == before
+
+
 def test_delete_semantics(spark, tmp_table_path):
     t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=4)
     rows = [
@@ -536,6 +641,8 @@ def test_create_rejects_non_key_bucket_cols(spark, tmp_table_path):
 
 
 def test_vacuum_reclaims_orphaned_staging(spark, tmp_table_path):
+    """Tables written by earlier versions, whose CoW merges staged under
+    _staging/, may hold orphaned staging dirs: vacuum reclaims them."""
     import os
 
     t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=2)
