@@ -34,6 +34,7 @@ replaces that with true upserts + atomic snapshots.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
@@ -780,7 +781,7 @@ class LakeTable:
 
         return out.select(*[typed(c) for c in want])
 
-    def _lww_stored(self, df: DataFrame) -> DataFrame:
+    def _lww_stored(self, df: DataFrame, reduce=dedup_lww) -> DataFrame:
         """LWW-reduce stored multi-version rows. On patch-enabled tables
         the ordering is lexicographic (``_seq``, ``_fold``, values): two
         versions of a key can legitimately share the max ``_seq`` (a
@@ -788,10 +789,12 @@ class LakeTable:
         max event seq), and the strictly-increasing fold counter makes
         the LATEST written state win deterministically. Implemented by
         moving a coalesced ``_fold`` to the FIRST payload slot of the
-        ordering struct — ``dedup_lww`` orders payload in column order."""
+        ordering struct — ``dedup_lww`` orders payload in column order.
+        ``reduce(df, keys, seq_col)`` is any LWW reduce of that contract
+        (``dedup_lww`` by default)."""
         keys = self.manifest.key_cols
         if FOLD_COL not in df.columns:
-            return dedup_lww(df, keys, SEQ_COL)
+            return reduce(df, keys, SEQ_COL)
         orig = list(df.columns)
         rest = [c for c in orig if c not in (*keys, FOLD_COL)]
         df = df.select(
@@ -799,7 +802,7 @@ class LakeTable:
             F.coalesce(F.col(FOLD_COL), F.col(SEQ_COL)).alias(FOLD_COL),
             *rest,
         )
-        return dedup_lww(df, keys, SEQ_COL).select(*orig)
+        return reduce(df, keys, SEQ_COL).select(*orig)
 
     def _set_prop(self, key: str, value: Any) -> None:
         """Commit a metadata-only manifest version with one table property
@@ -1302,6 +1305,61 @@ class LakeTable:
     def is_batch_applied(self, stream_id: str, batch_id: int | str) -> bool:
         return str(batch_id) in self.manifest.applied_batches.get(stream_id, {})
 
+    def _reduce_mor_batch(self, batch: DataFrame, dedup_strategy: str = "semijoin",
+                          salt_buckets: int | None = None) -> DataFrame:
+        """LWW-reduce a normalized merge-on-read batch to one row per key,
+        shaped for ``_salted_bucket_write``.
+
+        On a table whose bucket columns are key columns, the reduce is a
+        ``max(struct)`` grouped by the write's own (bucket, salt)
+        expressions over the write's shuffle (``lww_residual``), so the
+        batch crosses one full-row shuffle, not two. Exact: bucket and
+        salt are functions of the key, so a key's rows meet in one group.
+        What feeds it depends on the batch's planned size:
+
+        - a small batch — Catalyst's size estimate of its optimized plan
+          within the session's ``spark.sql.autoBroadcastJoinThreshold``
+          (-1 disables) — or any batch under ``dedup_strategy="agg"``
+          goes in whole: one shuffle, no winner list, no broadcast, 2
+          Spark jobs for a small commit;
+        - a large or unknown-size batch under the default "semijoin"
+          first goes through ``semijoin_candidates`` (a HashAggregate
+          winner list, broadcast, semi join), which keeps the payload of
+          every non-winning row out of the shuffle and caps a hot key's
+          reducer input — the shape that wins from a few million events
+          up (operators/dedup.py has the crossover).
+
+        The gate sees only Catalyst's estimate: a Python-list
+        ``createDataFrame`` is of unknown size (Long.MaxValue), and a
+        filter is estimated at its input's size, so each window of a
+        multi-window replay over one input stays on the semijoin.
+        Salted, patch-state and legacy non-key-bucket batches take the
+        unfused reduce."""
+        m = self.manifest
+        if (not salt_buckets and CSEQ_COL not in batch.columns
+                and set(m.bucket_cols) <= set(m.key_cols)):
+            tagged = batch.withColumn(BUCKET_COL, self._bucket_expr())
+            if dedup_strategy == "semijoin":
+                # read as bytes through SQLConf: the string form has a
+                # unit. A threshold of -1 is below every size.
+                threshold = self.spark._jsparkSession.sessionState().conf() \
+                    .autoBroadcastJoinThreshold()
+                size = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+                if int(size) > threshold:
+                    tagged = semijoin_candidates(tagged, m.key_cols, SEQ_COL)
+            return lww_residual(tagged, [BUCKET_COL, *m.key_cols], SEQ_COL,
+                                self._write_partitioning())
+        # a patch-state batch (changelog replication of a patch-mode
+        # source) can carry two versions of a key at the SAME max
+        # ``_seq``: a later patch fold raises ``_fold``, not the max
+        # event seq, so it is ordered (``_seq``, ``_fold``) exactly like
+        # stored rows. Plain batches keep the payload-order tie-break.
+        if salt_buckets:
+            return self._lww_stored(
+                batch, functools.partial(dedup_lww_salted, salt_buckets=salt_buckets))
+        return self._lww_stored(
+            batch, functools.partial(dedup_lww, strategy=dedup_strategy))
+
     def merge(
         self,
         updates: DataFrame,
@@ -1342,9 +1400,12 @@ class LakeTable:
            and write it bucket-partitioned in one pass over the batch
            (one Spark job per shuffle stage under AQE; ≤ ``write_salt``
            files per bucket for a large batch, one for a small one). The
-           default semijoin reduce runs its residual aggregate over the
-           write's own (bucket, salt) shuffle, so the reduced rows cross
-           one shuffle, not two; the key blooms of ``point_index_bits``
+           reduce is a ``max(struct)`` over the write's own (bucket,
+           salt) shuffle; a batch within
+           ``spark.sql.autoBroadcastJoinThreshold`` by Catalyst's size
+           estimate goes in whole (2 Spark jobs), a larger one first
+           through the semijoin's winner list (``_reduce_mor_batch``).
+           The key blooms of ``point_index_bits``
            are built by the same write. Affected buckets and byte sizes
            come from the listing of the written files; row counts, the
            batch's seq range and ``stats_cols`` ranges from their parquet
@@ -1470,59 +1531,13 @@ class LakeTable:
         )
 
         # (2) mor: reduce the batch to one winner per key (cow skips
-        # this: its fold reduces the raw batch). Default "semijoin" keeps
-        # wide payloads out of the aggregate (HashAgg winner list +
-        # broadcast semi join — benched ~2x over the one-pass
-        # sort-aggregate and skew-immune via map-side partial agg); "agg"
-        # (+ optional salt_buckets) is the single-pass fallback for
-        # batches whose per-batch winner list is too large to broadcast.
-        # Callers that ALREADY hold one row per key (merge_patches'
-        # collapse, a pre-aggregated compaction fold) pass
-        # pre_reduced=True to skip the reduction shuffle entirely — the
-        # contract is the caller's to uphold; a duplicate key would
-        # produce duplicate stored rows.
-        if mode == "cow" or pre_reduced:
-            pass
-        elif (dedup_strategy == "semijoin" and not salt_buckets
-              and not carries_patch_state
-              and set(m.bucket_cols) <= set(m.key_cols)):
-            # the residual reduce runs over the bucketed write's own
-            # (bucket, salt) shuffle, grouped by those expressions too,
-            # so the write adds no second full-row shuffle. Exact:
-            # bucket and salt are functions of the key, so every row of
-            # a key still meets in one group.
-            batch = lww_residual(
-                semijoin_candidates(
-                    batch.withColumn(BUCKET_COL, self._bucket_expr()),
-                    m.key_cols, SEQ_COL,
-                ),
-                [BUCKET_COL, *m.key_cols], SEQ_COL, self._write_partitioning(),
-            )
-        else:
-            # a patch-state batch (changelog replication of a patch-mode
-            # source) can carry two versions of a key at the SAME max
-            # ``_seq``: a later patch fold raises ``_fold``, not the max
-            # event seq. Order the reduce (``_seq``, ``_fold``) exactly
-            # like ``_lww_stored`` — each patch write's (_seq, _fold) is
-            # strictly above every older physical version and its row +
-            # ``_cseq`` subsume them (pointwise-max join), so the
-            # lexicographic winner is the fully-folded state. Plain
-            # batches keep the original payload-order tie-break.
-            reduce_in, orig = batch, None
-            if carries_patch_state:
-                orig = list(batch.columns)
-                rest = [c for c in orig if c not in (*m.key_cols, FOLD_COL)]
-                reduce_in = batch.select(
-                    *m.key_cols,
-                    F.coalesce(F.col(FOLD_COL), F.col(SEQ_COL)).alias(FOLD_COL),
-                    *rest,
-                )
-            if salt_buckets:
-                batch = dedup_lww_salted(reduce_in, m.key_cols, SEQ_COL, salt_buckets)
-            else:
-                batch = dedup_lww(reduce_in, m.key_cols, SEQ_COL, strategy=dedup_strategy)
-            if orig is not None:
-                batch = batch.select(*orig)
+        # this: its fold reduces the raw batch). Callers that ALREADY
+        # hold one row per key (merge_patches' collapse, a pre-aggregated
+        # compaction fold) pass pre_reduced=True to skip the reduction
+        # shuffle entirely — the contract is the caller's to uphold; a
+        # duplicate key would produce duplicate stored rows.
+        if mode == "mor" and not pre_reduced:
+            batch = self._reduce_mor_batch(batch, dedup_strategy, salt_buckets)
 
         new_version = m.table_version + 1
         commit_dir = os.path.join(
@@ -2760,7 +2775,7 @@ class LakeTable:
                 "table_version": new_manifest.table_version}
 
     def vacuum(
-        self, *, retain_versions: int = 1, grace_seconds: float = 0.0
+        self, *, retain_versions: int = 1, grace_seconds: float = 3 * 24 * 3600.0
     ) -> dict:
         """Expire old table versions and delete unreferenced data files
         (Iceberg ``expire_snapshots`` + ``remove_orphan_files`` analog).
@@ -2779,11 +2794,13 @@ class LakeTable:
         racing an in-flight commit — whose freshly staged parquet is on
         disk but whose manifest has not landed yet — cannot yank the
         files out from under it (data loss: the rival's CAS commit would
-        then reference deleted files). The default 0 keeps the
-        single-maintainer behavior (delete everything unreferenced, the
-        in-loop maintenance shape); any process running vacuum
-        CONCURRENTLY with writers must pass a grace comfortably above
-        the longest write-stage-commit span it races.
+        then reference deleted files). The default, 3 days (Iceberg
+        ``remove_orphan_files``' default), is safe for any writer that
+        commits within that span of writing its files. Only the table's
+        single writer may pass 0 to delete everything unreferenced at
+        once — ``ReplayDriver`` and ``stream_into_table`` do so for their
+        in-loop maintenance, since no commit of theirs can be in flight
+        while they vacuum.
 
         Scope of the guard: age shields NEWLY WRITTEN files only. A
         concurrent commit that RE-REFERENCES historical files —

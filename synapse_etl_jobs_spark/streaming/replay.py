@@ -80,7 +80,14 @@ class ReplayDriver:
         ``target_file_mb`` / an explicit ``drop_tombstones=True``).
 
         ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
-        table's batch reduce (see ``LakeTable.merge``).
+        table's batch reduce (see ``LakeTable.merge``). Under the default
+        "semijoin", a window whose planned size is within
+        ``spark.sql.autoBroadcastJoinThreshold`` is reduced in one pass
+        over the write's shuffle. Each window is a seq filter of
+        ``events``, and Catalyst estimates a filter at its input's size:
+        a replay that splits one input into several windows keeps every
+        window on the semijoin, while a one-window call per small input
+        (a tailing loop's poll) takes the one-pass reduce.
 
         ``vacuum_every=K`` schedules the OTHER growth term's maintenance:
         the manifest version chain and the dead data files it pins grow
@@ -99,8 +106,11 @@ class ReplayDriver:
         because the driver IS the table's single writer. When both fire
         on the same batch, compaction runs first so vacuum immediately
         reclaims the files it obsoleted. ``vacuum_opts`` is forwarded to
-        ``vacuum()`` (default ``retain_versions=2``: the current version
-        plus one rollback point)."""
+        ``vacuum()`` (defaults ``retain_versions=2``: the current version
+        plus one rollback point, and ``grace_seconds=0``: the driver's own
+        commits are never in flight while it vacuums, so every
+        unreferenced file goes at once; pass a grace if another process
+        writes to the table)."""
         if num_batches is not None and num_batches < 1:
             raise ValueError("num_batches must be >= 1")
         if compact_every is not None and compact_every < 1:
@@ -122,7 +132,8 @@ class ReplayDriver:
             **(compact_opts or {}),
         }
         self.vacuum_every = vacuum_every
-        self.vacuum_opts = {"retain_versions": 2, **(vacuum_opts or {})}
+        self.vacuum_opts = {"retain_versions": 2, "grace_seconds": 0,
+                            **(vacuum_opts or {})}
         # persist across replay() calls: a tailing loop invokes replay()
         # once per poll, and "every K applied batches" must count across
         # polls, not per call
@@ -264,7 +275,10 @@ def stream_into_table(
     ``trigger_once`` runs one availableNow pass (the scheduled-batch shape
     the reference uses); set False for continuous micro-batches.
     ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
-    table's batch reduce (see ``LakeTable.merge``).
+    table's batch reduce (see ``LakeTable.merge``): a micro-batch whose
+    planned size is within ``spark.sql.autoBroadcastJoinThreshold`` is
+    reduced in one pass over the write's shuffle, a larger one (or one of
+    unknown size) through the semijoin.
 
     ``compact_every=K`` compacts the table after every K APPLIED
     micro-batches (redelivered batches that marker-short-circuit don't
@@ -276,7 +290,9 @@ def stream_into_table(
     state-preserving), so nothing is checkpointed for it.
     ``vacuum_every=K`` likewise schedules manifest-chain + orphan-file
     reclamation (ReplayDriver docstring has the trade-off; compaction
-    runs before vacuum when both fire on one batch).
+    runs before vacuum when both fire on one batch). As there,
+    ``vacuum_opts`` defaults to ``retain_versions=2, grace_seconds=0``:
+    the query is the table's single writer.
 
     ``patches=True`` routes micro-batches through ``merge_patches`` —
     partial-column change events (see operators/patch.py). Patch
@@ -286,7 +302,7 @@ def stream_into_table(
     stale batch redelivered under a fresh id, reconverges.
     """
     copts = {"min_files": 2, "drop_tombstones": False, **(compact_opts or {})}
-    vopts = {"retain_versions": 2, **(vacuum_opts or {})}
+    vopts = {"retain_versions": 2, "grace_seconds": 0, **(vacuum_opts or {})}
     applied_count = [0]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:

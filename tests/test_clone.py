@@ -57,7 +57,7 @@ def test_clone_is_zero_copy_and_diverges_cow(spark, tmp_path):
     # vacuum on the fork only sweeps its own data/ root — shared source
     # files are never candidates
     fork = LakeTable.load(spark, fork.path)
-    fork.vacuum(retain_versions=1)
+    fork.vacuum(retain_versions=1, grace_seconds=0)
     assert _data_files(src) == src_files
     assert _state(LakeTable.load(spark, src.path)) == {
         (j, f"v{j}") for j in range(16)

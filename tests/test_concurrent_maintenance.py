@@ -11,7 +11,8 @@ the maintenance op no longer just dies when it loses the race:
   ``compact_with_retry`` recomputes over the new parent and converges.
 - ``rebucket_with_retry`` recomputes (a rebucket can never rebase).
 - ``vacuum(grace_seconds=...)`` shields an in-flight commit's freshly
-  staged files from a concurrent vacuum (Iceberg ``older_than`` analog).
+  staged files from a concurrent vacuum (Iceberg ``older_than`` analog;
+  3 days by default).
 
 The flagship test runs the merge in a SEPARATE OS process with its own
 SparkSession, landing it genuinely mid-compaction (between the
@@ -102,7 +103,7 @@ def test_compact_rebases_past_inflight_mor_merge(spark, tmp_path):
     expect = {(j, f"v2.{j}") for j in range(8)} - {(1, "v2.1")}
     expect |= {(100, "rival")}
     assert _state(final) == expect
-    final.vacuum()
+    final.vacuum(grace_seconds=0)
     _no_unreferenced_files(final)
     assert _state(LakeTable.load(spark, path)) == expect
 
@@ -153,8 +154,8 @@ def test_rebucket_with_retry_converges(spark, tmp_path):
 
 def test_vacuum_grace_shields_inflight_files(spark, tmp_path):
     """grace_seconds: an unreferenced-but-fresh parquet (an in-flight
-    commit's staged data) survives a concurrent vacuum; with the
-    default grace 0 it is reclaimed."""
+    commit's staged data) survives a concurrent vacuum, under the
+    default grace too; with grace 0 it is reclaimed."""
     path = str(tmp_path / "t")
     t = _mk(spark, path)
     t.merge(_ev(spark, [(1, "a", "UPSERT", 1)]), batch_id=0)
@@ -168,10 +169,12 @@ def test_vacuum_grace_shields_inflight_files(spark, tmp_path):
     staging = os.path.join(path, "_staging", "s-race")
     os.makedirs(staging)
 
+    assert t.vacuum(retain_versions=1)["expired_manifests"] > 0
+    assert os.path.exists(inflight) and os.path.isdir(staging)
     t.vacuum(retain_versions=1, grace_seconds=3600)
     assert os.path.exists(inflight) and os.path.isdir(staging)
 
-    t.vacuum(retain_versions=1)  # maintenance-window semantics unchanged
+    t.vacuum(retain_versions=1, grace_seconds=0)  # single-maintainer window
     assert not os.path.exists(inflight) and not os.path.isdir(staging)
     _no_unreferenced_files(t)
 
@@ -267,7 +270,7 @@ def test_two_process_merge_lands_mid_compaction(spark, tmp_path):
 
     assert sha(final) == sha(serial)
 
-    final.vacuum()
+    final.vacuum(grace_seconds=0)
     _no_unreferenced_files(LakeTable.load(spark, path))
 
 

@@ -367,7 +367,7 @@ def test_vacuum_expires_old_versions(spark, events, tmp_table_path):
                                  recursive=True))
     state_before = table_state(t)
 
-    stats = t.vacuum(retain_versions=1)
+    stats = t.vacuum(retain_versions=1, grace_seconds=0)
     assert stats["deleted_data_files"] > 0
     assert stats["expired_manifests"] == 3  # v0..v2 gone, v3 kept
     after_files = len(glob.glob(os.path.join(tmp_table_path, "data", "**", "*.parquet"),
@@ -388,10 +388,10 @@ def test_vacuum_retains_mor_deltas(spark, events, tmp_table_path):
                          num_buckets=4, write_mode="mor")
     t.merge(events.filter(F.col("seq") < 1000), batch_id=0)
     t.merge(events.filter(F.col("seq") >= 1000), batch_id=1)
-    assert t.vacuum(retain_versions=1)["deleted_data_files"] == 0
+    assert t.vacuum(retain_versions=1, grace_seconds=0)["deleted_data_files"] == 0
     state = table_state(t)
     t.compact()
-    stats = t.vacuum(retain_versions=1)
+    stats = t.vacuum(retain_versions=1, grace_seconds=0)
     assert stats["deleted_data_files"] > 0  # pre-compaction deltas expired
     assert_states_equal(table_state(LakeTable.load(spark, tmp_table_path)), state)
 
@@ -653,7 +653,7 @@ def test_vacuum_reclaims_orphaned_staging(spark, tmp_table_path):
     orphan = os.path.join(tmp_table_path, "_staging", "s_dead")
     os.makedirs(orphan)
     open(os.path.join(orphan, "junk.parquet"), "w").write("x")
-    t.vacuum()
+    t.vacuum(grace_seconds=0)
     assert not os.path.exists(orphan)
     assert t.read().count() == 1
 
@@ -671,3 +671,93 @@ def test_dedup_semijoin_null_seq_keys_survive(spark):
     assert agg == sj
     assert ("a", "a_null") in sj       # all-null key kept
     assert ("b", "b1") in sj           # non-null seq beats null
+
+
+def test_mor_reduce_same_across_size_gate(spark, tmp_path, monkeypatch):
+    """A MoR batch within spark.sql.autoBroadcastJoinThreshold is reduced
+    in one pass over the write shuffle; a larger or unknown-size one
+    through the semijoin. Both store the same rows for an adversarial
+    batch (UPDATE/DELETE tied on seq and payload, payload ties, verbatim
+    redeliveries, null seqs), from a Python-list batch (unknown size:
+    always semijoin) and from a parquet batch (sized: one pass at the
+    default threshold)."""
+    ddl = ("op string, seq long, repo string, path string, commit string, "
+           "lang string, content string")
+
+    def ev(op, seq, key, content="same"):
+        return (op, seq, "r", key, "c", "python", content)
+
+    rows = [
+        ev("UPDATE", 5, "ud"), ev("DELETE", 5, "ud"),
+        ev("UPDATE", 7, "ptie", "a"), ev("UPDATE", 7, "ptie", "b"),
+        ev("INSERT", 3, "dup", "v3"), ev("INSERT", 3, "dup", "v3"),
+        ev("UPDATE", 2, "dup", "v2"),
+        ev("INSERT", None, "nulls", "a"), ev("UPDATE", None, "nulls", "b"),
+        ev("UPDATE", None, "somenull", "n"), ev("UPDATE", 1, "somenull", "s"),
+    ] + [ev("UPSERT", 10 + i, f"p{i}", f"v{i}") for i in range(40)]
+    rows += rows[-10:]  # redelivered verbatim
+    listed = spark.createDataFrame(rows, ddl)
+    listed.write.parquet(str(tmp_path / "batch"))
+    sources = {"list": listed, "parquet": spark.read.parquet(str(tmp_path / "batch"))}
+
+    semi = {}
+    real_write = LakeTable._salted_bucket_write
+
+    def spy_write(self, df, *args, **kwargs):
+        semi[self.path] = "LeftSemi" in df._jdf.queryExecution().optimizedPlan().toString()
+        return real_write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_salted_bucket_write", spy_write)
+    gate = "spark.sql.autoBroadcastJoinThreshold"
+    was = spark.conf.get(gate)
+    states = {}
+    try:
+        for threshold in (was, "1"):
+            spark.conf.set(gate, threshold)
+            for src, batch in sources.items():
+                path = str(tmp_path / f"t-{src}-{threshold}")
+                t = LakeTable.create(spark, path, SCHEMA, KEYS, num_buckets=4,
+                                     write_mode="mor")
+                t.merge(batch, batch_id=0)
+                assert semi[path] == (src == "list" or threshold == "1"), (src, threshold)
+                lineage = t.lineage().select("bucket", "rows", "seq_min", "seq_max",
+                                             "source_events")
+                states[src, threshold] = (
+                    sorted(t.read(include_internal=True).collect()),
+                    sorted(t.lookup_keys(
+                        [("r", k, "c") for k in ("ud", "ptie", "dup", "nulls",
+                                                 "somenull", "p3", "absent")]
+                    ).collect()),
+                    sorted(lineage.collect()),
+                )
+    finally:
+        spark.conf.set(gate, was)
+    first, *rest = states.values()
+    assert all(s == first for s in rest)
+    live = {r["path"]: r["content"] for r in first[0] if not r["_deleted"]}
+    assert live["ptie"] == "b" and live["dup"] == "v3" and live["somenull"] == "s"
+    assert live["nulls"] == "b" and "ud" not in live and len(live) == 44
+
+
+def test_plan_audit_fused_reduce_check(spark, tmp_path):
+    """The plan audit's merge-reduce check holds on both sides of the size
+    gate, and leaves the session's broadcast threshold as it found it."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "tools", "explain_audit.py")
+    spec = importlib.util.spec_from_file_location("explain_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    spark.range(2000).select(
+        (F.col("id") % 97).alias("user_id"), F.col("id").alias("event_id"),
+        F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias("event_type"),
+        (F.col("id") / 3).alias("value"),
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    gate = "spark.sql.autoBroadcastJoinThreshold"
+    was = spark.conf.get(gate)
+    name, txt, problems = audit._fused_merge_reduce_check(spark, str(tmp_path))
+    assert name == "merge_fused_reduce"
+    assert problems == [], problems
+    assert spark.conf.get(gate) == was

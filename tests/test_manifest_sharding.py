@@ -145,7 +145,7 @@ def test_vacuum_reclaims_unreferenced_side_files(spark, tmp_table_path):
     _ingest(spark, t, 6, keys_per_batch=2)
     bdir = os.path.join(tmp_table_path, "_manifests", "buckets")
     before = set(os.listdir(bdir))
-    res = t.vacuum(retain_versions=1)
+    res = t.vacuum(retain_versions=1, grace_seconds=0)
     after = set(os.listdir(bdir))
     assert res["deleted_side_manifests"] > 0
     assert after < before

@@ -141,28 +141,34 @@ def _semijoin_plan_check(spark, sf_dir):
 
 
 def _fused_merge_reduce_check(spark, sf_dir):
-    """merge's default LWW reduce is fused into its bucketed write: the
-    semijoin fragments above hold, and the ONLY Exchange that moves full
-    rows is the write's ``hashpartitioning(_bucket, salt)`` under the
-    residual aggregate — no key-hash exchange between that aggregate and
-    its candidates, and the write's own repartition planned away.
-    Checked on the physical tree (AQE off, so exchanges are plain
-    nodes): every shuffle outside the broadcast winner list moves the
-    candidates' full rows (or their partial aggregates)."""
+    """merge's MoR reduce (``LakeTable._reduce_mor_batch``) is fused into
+    its bucketed write on both sides of its size gate: the ONLY Exchange
+    that moves full rows is the write's ``hashpartitioning(_bucket,
+    salt)`` under the ``max(struct)`` aggregate, and the write's own
+    repartition is planned away.
+
+    - At the session's ``spark.sql.autoBroadcastJoinThreshold`` the
+      events batch fits, so it is reduced in one pass: no winner list,
+      no broadcast, no semi join. The aggregate (partial and final) runs
+      after the shuffle, so every batch row crosses it — which is why
+      only a small batch takes this side.
+    - With the threshold at 1 byte it does not, and the semijoin
+      fragments hold: a partial ``max(seq)`` winner list, broadcast, a
+      left-semi join into the same single full-row Exchange.
+
+    Exchanges are counted on the physical tree with AQE off (so they are
+    plain nodes), leaving out those under the broadcast winner list."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from synapse_etl_jobs_spark.lake.table import BUCKET_COL, LakeTable
-    from synapse_etl_jobs_spark.operators.dedup import (
-        lww_residual, semijoin_candidates,
-    )
+    from synapse_etl_jobs_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("user_id"), F.col("event_id").alias("seq"),
-        F.col("event_type"), F.col("value"),
+        F.col("user_id"), F.col("event_type"), F.col("value"),
+        F.col("event_id").cast("long").alias(SEQ_COL), F.lit(False).alias(DELETED_COL),
     )
     tmp = tempfile.mkdtemp(prefix="fused_reduce_")
     t = LakeTable.create(
@@ -171,41 +177,55 @@ def _fused_merge_reduce_check(spark, sf_dir):
         ["user_id"], num_buckets=16, write_mode="mor",
     )
     shutil.rmtree(tmp)  # only the table handle's spec is needed
-    def fused():
+
+    def reduced():
         # the shape merge builds, then the default bucketed write's
         # repartition
-        part = t._write_partitioning()
-        return lww_residual(
-            semijoin_candidates(ev.withColumn(BUCKET_COL, t._bucket_expr()),
-                                ["user_id"], "seq"),
-            [BUCKET_COL, "user_id"], "seq", part,
-        ).repartition(*part)
+        return t._reduce_mor_batch(ev).repartition(*t._write_partitioning())
 
-    txt = plan_text(fused())
-    required = ["partial_max(seq", "BroadcastHashJoin", "LeftSemi",
-                "hashpartitioning(_bucket"]
-    forbidden = ["SortMergeJoin", "BatchEvalPython"]
-    problems = [f"MISSING required plan fragment: {s!r}" for s in required if s not in txt]
-    problems += [f"FORBIDDEN plan fragment present: {s!r}" for s in forbidden if s in txt]
-    # a frame built with AQE off plans exchanges as plain tree nodes
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        nodes = _jnodes(fused()._jdf.queryExecution().executedPlan())
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    full_row = [
-        n.outputPartitioning().toString() for n in nodes
-        if n.nodeName() == "Exchange"
-        and not any(n.equals(m) for b in nodes if b.nodeName() == "BroadcastExchange"
-                    for m in _jnodes(b))
+    def full_row_exchanges():
+        # a frame built with AQE off plans exchanges as plain tree nodes
+        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            nodes = _jnodes(reduced()._jdf.queryExecution().executedPlan())
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+        return [
+            n.outputPartitioning().toString() for n in nodes
+            if n.nodeName() == "Exchange"
+            and not any(n.equals(m) for b in nodes
+                        if b.nodeName() == "BroadcastExchange" for m in _jnodes(b))
+        ]
+
+    gate = "spark.sql.autoBroadcastJoinThreshold"
+    sides = [
+        ("one pass", None, ["partial_max(struct(_s", "hashpartitioning(_bucket"],
+         ["BroadcastExchange", "LeftSemi", "SortMergeJoin", "BatchEvalPython"]),
+        ("semijoin", "1",
+         ["partial_max(_seq", "BroadcastHashJoin", "LeftSemi", "hashpartitioning(_bucket"],
+         ["SortMergeJoin", "BatchEvalPython"]),
     ]
-    if len(full_row) != 1 or not full_row[0].startswith("hashpartitioning(_bucket"):
-        problems.append(
-            f"expected one full-row Exchange on hashpartitioning(_bucket, ...), "
-            f"got {full_row}"
-        )
-    return "merge_fused_reduce", txt, problems
+    threshold_was = spark.conf.get(gate)
+    txts, problems = [], []
+    for side, threshold, required, forbidden in sides:
+        spark.conf.set(gate, threshold or threshold_was)
+        try:
+            txt = plan_text(reduced())
+            full_row = full_row_exchanges()
+        finally:
+            spark.conf.set(gate, threshold_was)
+        txts.append(f"-- {side} --\n{txt}")
+        problems += [f"{side}: MISSING required plan fragment: {s!r}"
+                     for s in required if s not in txt]
+        problems += [f"{side}: FORBIDDEN plan fragment present: {s!r}"
+                     for s in forbidden if s in txt]
+        if len(full_row) != 1 or not full_row[0].startswith("hashpartitioning(_bucket"):
+            problems.append(
+                f"{side}: expected one full-row Exchange on "
+                f"hashpartitioning(_bucket, ...), got {full_row}"
+            )
+    return "merge_fused_reduce", "\n".join(txts), problems
 
 
 def _patch_collapse_check(spark, sf_dir):

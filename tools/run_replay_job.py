@@ -48,7 +48,11 @@ def main() -> None:
     p.add_argument("--stream-id", default="replay")
     p.add_argument("--salt-buckets", type=int, default=None,
                    help="salted two-phase dedup (only with --dedup-strategy agg)")
-    p.add_argument("--dedup-strategy", choices=["semijoin", "agg"], default="semijoin")
+    p.add_argument("--dedup-strategy", choices=["semijoin", "agg"], default="semijoin",
+                   help="merge-on-read batch reduce: semijoin (default) reduces a batch "
+                        "within spark.sql.autoBroadcastJoinThreshold in one pass "
+                        "and a larger one through a broadcast winner list; agg "
+                        "reduces every batch in one pass")
     p.add_argument("--compact", action="store_true", help="compact after replay")
     p.add_argument("--exclude", default="op,seq,ts_ms,source_partition,offset",
                    help="envelope columns not stored in the table")

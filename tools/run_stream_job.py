@@ -37,7 +37,11 @@ def main() -> None:
     p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--stream-id", default="stream")
     p.add_argument("--dedup-strategy", choices=["semijoin", "agg"],
-                   default="semijoin")
+                   default="semijoin",
+                   help="merge-on-read batch reduce: semijoin (default) reduces a batch "
+                        "within spark.sql.autoBroadcastJoinThreshold in one pass "
+                        "and a larger one through a broadcast winner list; agg "
+                        "reduces every batch in one pass")
     p.add_argument("--stateful-filter", action="store_true",
                    help="drop stale/duplicate events in Spark state "
                         "BEFORE the merge (bounded per-key watermark "
