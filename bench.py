@@ -126,7 +126,6 @@ def run_cdc_replay(spark, n_events: int, n_batches: int, mode: str = "mor") -> d
         t0 = time.time()
         driver = ReplayDriver(
             table, batch_events=(n_events + n_batches - 1) // n_batches,
-            salt_buckets=None,
         )
         driver.replay(events, seq_start=0, seq_end=n_events)
         wall = time.time() - t0

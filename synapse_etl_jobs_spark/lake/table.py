@@ -34,7 +34,6 @@ replaces that with true upserts + atomic snapshots.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import uuid
@@ -48,7 +47,7 @@ from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.lake.fs import LocalFS, filesystem_for
 from synapse_etl_jobs_spark.operators.dedup import (
-    dedup_lww, dedup_lww_salted, lww_residual, semijoin_candidates,
+    dedup_lww, dedup_lww_semijoin, lww_residual, semijoin_candidates,
 )
 
 class ConcurrentWriteError(RuntimeError):
@@ -1305,8 +1304,7 @@ class LakeTable:
     def is_batch_applied(self, stream_id: str, batch_id: int | str) -> bool:
         return str(batch_id) in self.manifest.applied_batches.get(stream_id, {})
 
-    def _reduce_mor_batch(self, batch: DataFrame, dedup_strategy: str = "semijoin",
-                          salt_buckets: int | None = None) -> DataFrame:
+    def _reduce_mor_batch(self, batch: DataFrame) -> DataFrame:
         """LWW-reduce a normalized merge-on-read batch to one row per key,
         shaped for ``_salted_bucket_write``.
 
@@ -1319,34 +1317,31 @@ class LakeTable:
 
         - a small batch — Catalyst's size estimate of its optimized plan
           within the session's ``spark.sql.autoBroadcastJoinThreshold``
-          (-1 disables) — or any batch under ``dedup_strategy="agg"``
-          goes in whole: one shuffle, no winner list, no broadcast, 2
-          Spark jobs for a small commit;
-        - a large or unknown-size batch under the default "semijoin"
-          first goes through ``semijoin_candidates`` (a HashAggregate
-          winner list, broadcast, semi join), which keeps the payload of
-          every non-winning row out of the shuffle and caps a hot key's
-          reducer input — the shape that wins from a few million events
-          up (operators/dedup.py has the crossover).
+          (-1 disables) — goes in whole: one shuffle, no winner list, no
+          broadcast, 2 Spark jobs for a small commit;
+        - a large or unknown-size batch first goes through
+          ``semijoin_candidates`` (a HashAggregate winner list,
+          broadcast, semi join), which keeps the payload of every
+          non-winning row out of the shuffle and caps a hot key's reducer
+          input — the shape that wins from a few million events up
+          (operators/dedup.py has the crossover).
 
         The gate sees only Catalyst's estimate: a Python-list
         ``createDataFrame`` is of unknown size (Long.MaxValue), and a
         filter is estimated at its input's size, so each window of a
         multi-window replay over one input stays on the semijoin.
-        Salted, patch-state and legacy non-key-bucket batches take the
-        unfused reduce."""
+        Patch-state and legacy non-key-bucket batches take the unfused
+        ``dedup_lww_semijoin``."""
         m = self.manifest
-        if (not salt_buckets and CSEQ_COL not in batch.columns
-                and set(m.bucket_cols) <= set(m.key_cols)):
+        if CSEQ_COL not in batch.columns and set(m.bucket_cols) <= set(m.key_cols):
             tagged = batch.withColumn(BUCKET_COL, self._bucket_expr())
-            if dedup_strategy == "semijoin":
-                # read as bytes through SQLConf: the string form has a
-                # unit. A threshold of -1 is below every size.
-                threshold = self.spark._jsparkSession.sessionState().conf() \
-                    .autoBroadcastJoinThreshold()
-                size = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                if int(size) > threshold:
-                    tagged = semijoin_candidates(tagged, m.key_cols, SEQ_COL)
+            # read as bytes through SQLConf: the string form has a unit.
+            # A threshold of -1 is below every size.
+            threshold = self.spark._jsparkSession.sessionState().conf() \
+                .autoBroadcastJoinThreshold()
+            size = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            if int(size) > threshold:
+                tagged = semijoin_candidates(tagged, m.key_cols, SEQ_COL)
             return lww_residual(tagged, [BUCKET_COL, *m.key_cols], SEQ_COL,
                                 self._write_partitioning())
         # a patch-state batch (changelog replication of a patch-mode
@@ -1354,11 +1349,7 @@ class LakeTable:
         # ``_seq``: a later patch fold raises ``_fold``, not the max
         # event seq, so it is ordered (``_seq``, ``_fold``) exactly like
         # stored rows. Plain batches keep the payload-order tie-break.
-        if salt_buckets:
-            return self._lww_stored(
-                batch, functools.partial(dedup_lww_salted, salt_buckets=salt_buckets))
-        return self._lww_stored(
-            batch, functools.partial(dedup_lww, strategy=dedup_strategy))
+        return self._lww_stored(batch, dedup_lww_semijoin)
 
     def merge(
         self,
@@ -1368,10 +1359,8 @@ class LakeTable:
         seq_col: str = "seq",
         stream_id: str = "default",
         batch_id: int | str | None = None,
-        salt_buckets: int | None = None,
         collect_lineage: bool = True,
         mode: str | None = None,
-        dedup_strategy: str = "semijoin",
         auto_evolve: bool = False,
         pre_reduced: bool = False,
     ) -> dict[str, Any]:
@@ -1396,12 +1385,11 @@ class LakeTable:
         Execution:
 
         1. idempotency gate — a batch_id already recorded is a no-op;
-        2. ``mor``: LWW-reduce the batch (salted two-phase if requested)
-           and write it bucket-partitioned in one pass over the batch
-           (one Spark job per shuffle stage under AQE; ≤ ``write_salt``
-           files per bucket for a large batch, one for a small one). The
-           reduce is a ``max(struct)`` over the write's own (bucket,
-           salt) shuffle; a batch within
+        2. ``mor``: LWW-reduce the batch and write it bucket-partitioned
+           in one pass over the batch (one Spark job per shuffle stage
+           under AQE; ≤ ``write_salt`` files per bucket for a large
+           batch, one for a small one). The reduce is a ``max(struct)``
+           over the write's own (bucket, salt) shuffle; a batch within
            ``spark.sql.autoBroadcastJoinThreshold`` by Catalyst's size
            estimate goes in whole (2 Spark jobs), a larger one first
            through the semijoin's winner list (``_reduce_mor_batch``).
@@ -1416,11 +1404,11 @@ class LakeTable:
         3. ``cow``: a keys-only aggregate over the batch yields the
            affected buckets and lineage counts; ONE LWW reduce over those
            buckets' stored files and the raw batch rows then rewrites
-           them as base files (``dedup_strategy``, ``salt_buckets`` and
-           ``pre_reduced`` shape only the MoR reduce). Replayed stale
-           events lose to stored rows, so re-merge of any suffix is
-           idempotent even WITHOUT the batch marker (the marker is an
-           optimization, not a correctness crutch). A failed fold's
+           them as base files (``pre_reduced`` shapes only the MoR
+           reduce). Replayed stale events lose to stored rows, so
+           re-merge of any suffix is idempotent even WITHOUT the batch
+           marker (the marker is an optimization, not a correctness
+           crutch). A failed fold's
            files stay unreferenced until ``vacuum`` reclaims them;
         4. DELETE winners are kept as TOMBSTONES (``_deleted=true``,
            hidden from reads): without them, a stale pre-delete update
@@ -1437,8 +1425,6 @@ class LakeTable:
         mode = mode or m.props.get("write_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown write mode: {mode}")
-        if dedup_strategy not in ("agg", "semijoin"):
-            raise ValueError(f"unknown dedup strategy: {dedup_strategy}")
         if batch_id is not None and self.is_batch_applied(stream_id, batch_id):
             return {"applied": False, "reason": "batch_already_applied",
                     "table_version": m.table_version}
@@ -1537,7 +1523,7 @@ class LakeTable:
         # shuffle entirely — the contract is the caller's to uphold; a
         # duplicate key would produce duplicate stored rows.
         if mode == "mor" and not pre_reduced:
-            batch = self._reduce_mor_batch(batch, dedup_strategy, salt_buckets)
+            batch = self._reduce_mor_batch(batch)
 
         new_version = m.table_version + 1
         commit_dir = os.path.join(

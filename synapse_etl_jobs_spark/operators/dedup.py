@@ -2,10 +2,11 @@
 
 The reference relies on upstream uniqueness plus job bookmarks; the north
 rule requires true LWW dedup on ``(repo, path, commit)`` keeping the row
-with the maximum event sequence. Three strategies, all bit-identical in
-output (equivalence is asserted in tests):
+with the maximum event sequence. Every reduce here orders a key's rows by
+``max(struct(seq, payload))`` and so picks the same winner (equivalence
+is asserted in tests).
 
-``dedup_lww`` (strategy ``"agg"``)
+``dedup_lww``
     ``groupBy(keys).agg(max(struct(seq, payload)))`` — ONE pass, one
     shuffle, map-side partial aggregation. ``max(struct)`` was chosen by
     measurement over alternatives (4M rows, local[32], 1M keys):
@@ -16,50 +17,69 @@ output (equivalence is asserted in tests):
     columns) is sorted map-side. Right choice when the input is already
     key-reduced or payloads are narrow.
 
-``dedup_lww_semijoin`` (strategy ``"semijoin"``)
+``dedup_lww_semijoin``
     Two passes that keep wide payloads OUT of the aggregate:
     (1) ``groupBy(keys).agg(max(seq))`` — a true HashAggregate (the
     buffer is a primitive), with column pruning pushing the scan down to
     keys+seq only (no content decompression);
-    (2) left-semi join of the full rows against the (keys, max-seq)
-    winner list — broadcast by default, so the full-width pass is
-    shuffle-free — then a residual max(struct) over the candidates
+    (2) left-semi join of the full rows against the (xxhash64(keys),
+    max-seq) winner list — broadcast by default, so the full-width pass
+    is shuffle-free — then a residual max(struct) over the candidates
     (≤ duplicate-delivery copies per key) to collapse exact re-deliveries
-    with identical tie-breaking to ``"agg"``. ``LakeTable.merge`` runs
-    that residual over its bucketed write's (bucket, salt) shuffle
-    (``lww_residual(partition_by=...)``), so the reduced rows are
-    shuffled once, not once to reduce and again to write.
-    Exactness: the winner row always matches its own (keys, max-seq)
-    entry, so it is always pulled; any other pulled row has seq ≤ max and
-    loses the residual aggregate. Benched on a 16M-event batch
-    (900k winners, skewed keys, full write): 10.7s vs 18.3s ("agg") at
-    local[32], 14.5s vs 30.4s at local[8]. Hot keys need no salting here:
-    pass 1's map-side partial aggregation caps any key's reducer input at
-    one row per scan partition.
-    Scale bound: the broadcast winner list is ~(key width + 8B) ×
-    distinct keys per batch — right while batches have ≲ tens of millions
-    of distinct keys; beyond that pass ``broadcast=False`` (plain join,
-    AQE picks the strategy) or use ``"agg"``.
-    Small batches: the winner list costs two Spark jobs (its shuffle and
-    its broadcast) whatever the batch size, which dominates a commit of a
-    few thousand events. ``LakeTable.merge`` therefore skips it for a
-    batch whose planned size is within
-    ``spark.sql.autoBroadcastJoinThreshold`` and runs only the residual
-    ``max(struct)`` over its write shuffle. That aggregate runs after
-    the shuffle, so every batch row crosses it. The crossover on a 4-CPU
-    box (``local[4]``, 16 buckets, ``write_salt`` 4, 500k keys; merge
-    wall of the first/second of two merges, semijoin vs one pass): a
-    2.12M-event window (228 MB by Catalyst's estimate) 24.3/11.1 s vs
-    22.1/11.7 s, about even; a 6.35M-event window (682 MB) 28.4/14.7 s
-    vs 42.3/31.8 s, the semijoin ~2x faster. The 10 MB default
-    threshold sits far below both.
+    with identical tie-breaking to ``dedup_lww`` (``semijoin_candidates``
+    says why the hashed join is exact). Benched on a 16M-event batch
+    (900k winners, skewed keys, full write): 10.7s vs 18.3s
+    (``dedup_lww``) at local[32], 14.5s vs 30.4s at local[8]. Hot keys
+    need no salting here: pass 1's map-side partial aggregation caps any
+    key's reducer input at one row per scan partition.
+    Scale bound: the broadcast winner list is ~16 bytes × distinct keys
+    per batch — right while batches have ≲ tens of millions of distinct
+    keys; beyond that pass ``broadcast=False`` (plain join, AQE picks the
+    strategy).
 
 ``dedup_lww_salted``
-    Two-phase salted variant of ``"agg"`` for pathological skew when the
-    single-pass shape is required: phase 1 aggregates on ``(keys, salt)``
-    where salt is derived deterministically from ``seq``, phase 2
-    re-aggregates the ≤``salt_buckets`` partial winners. Salt ONLY this
-    pre-merge reduction; never salt the merge join keys (SURVEY.md §7).
+    Two-phase salted variant of ``dedup_lww`` for pathological skew when
+    the single-pass shape is required: phase 1 aggregates on
+    ``(keys, salt)`` where salt is derived deterministically from
+    ``seq``, phase 2 re-aggregates the ≤``salt_buckets`` partial
+    winners. Salt ONLY this pre-merge reduction; never salt the merge
+    join keys (SURVEY.md §7).
+
+What ``LakeTable.merge`` builds for a merge-on-read batch
+(``LakeTable._reduce_mor_batch``), chosen by the batch's planned size:
+
+- a batch whose Catalyst size estimate is within
+  ``spark.sql.autoBroadcastJoinThreshold``: ``lww_residual`` alone over
+  the bucketed write's (bucket, salt) shuffle — one pass, 2 Spark jobs
+  for a small commit. That aggregate runs after the shuffle, so every
+  batch row crosses it;
+- a larger or unknown-size batch: ``semijoin_candidates`` first, then
+  the same fused ``lww_residual`` — the reduced rows are shuffled once,
+  not once to reduce and again to write;
+- a patch-state or legacy non-key-bucket batch: ``dedup_lww_semijoin``
+  unfused, through ``LakeTable._lww_stored``.
+
+The crossover on a 4-CPU box (``local[4]``, 16 buckets, ``write_salt``
+4, 500k keys; merge wall of the first/second of two merges, semijoin vs
+one pass): a 2.12M-event window (228 MB by Catalyst's estimate)
+24.3/11.1 s vs 22.1/11.7 s, about even; a 6.35M-event window (682 MB)
+28.4/14.7 s vs 42.3/31.8 s, the semijoin ~2x faster. The 10 MB default
+threshold sits far below both.
+
+Why ``merge`` offers neither the salted reduce nor one pass at every
+size: on the same box and table, in a fresh JVM per run, merge walls
+(first/second merge; one cell per run, and every run of a shape stored
+the same rows) were
+
+| batch | size gate (default) | salted, 8 | one pass |
+|---|---|---|---|
+| 2 × 2.12M, power law (hot key 1.3%) | 10.5/8.0 · 9.2/6.4 s | 9.6/8.3 · 10.3/8.1 s | 10.2/8.1 · 9.4/7.7 s |
+| 2 × 2.12M, one key 19% of events | 7.6/4.8 · 9.1/5.2 s | 8.4/6.2 · 12.2/8.0 s | 8.9/5.8 · 9.1/6.5 s |
+| 1 × 6.35M, power law | 15.6 · 14.1 s | 24.5 · 25.1 s | see the crossover |
+
+so the salted reduce is even or slower at 2M events and ~1.7x slower at
+6M, even with a 19% hot key, which pass 1's map-side partial
+aggregation already absorbs. Sizes above 6.35M events were not measured.
 """
 
 from __future__ import annotations
@@ -131,25 +151,14 @@ def _top_cols(df: DataFrame, payload: Sequence[str], unorderable: Sequence[str])
     return out
 
 
-def dedup_lww(
-    df: DataFrame,
-    keys: Sequence[str],
-    seq_col: str,
-    *,
-    strategy: str = "agg",
-) -> DataFrame:
+def dedup_lww(df: DataFrame, keys: Sequence[str], seq_col: str) -> DataFrame:
     """Keep, per key, the row with the maximum ``seq_col``.
 
     Ties on ``seq_col`` (absent in a well-formed CDC stream) break
     deterministically by payload ordering — replay convergence holds
-    even for malformed inputs. ``strategy``: ``"agg"`` (single-pass
-    sort-aggregate) or ``"semijoin"`` (two-pass, broadcast; see module
-    docstring for the tradeoff).
+    even for malformed inputs. Single-pass sort-aggregate; see the module
+    docstring for ``dedup_lww_semijoin``, its two-pass twin.
     """
-    if strategy == "semijoin":
-        return dedup_lww_semijoin(df, keys, seq_col)
-    if strategy != "agg":
-        raise ValueError(f"unknown dedup strategy: {strategy}")
     payload = _payload_cols(df, keys)
     uo = _unorderable_payload(df, payload)
     out = df.groupBy(*keys).agg(_lww_agg(payload, seq_col, uo))
@@ -162,27 +171,13 @@ def dedup_lww_semijoin(
     seq_col: str,
     *,
     broadcast: bool = True,
-    join_on_hash: bool = True,
 ) -> DataFrame:
     """Two-pass LWW dedup: HashAggregate winner list → (broadcast)
     left-semi join → residual candidate aggregate. Identical output to
-    ``dedup_lww(strategy="agg")``; see module docstring.
-
-    ``join_on_hash`` joins on ``(xxhash64(keys), seq)`` instead of the
-    raw key columns: the broadcast build side shrinks to 16 bytes/winner
-    (vs full key strings — ~10x less driver-side build, the per-batch
-    SERIAL cost that caps scaling efficiency). Still EXACT, not
-    probabilistic: pass 1 groups by the REAL keys, so every key's true
-    winner matches its own (hash, max-seq) entry and is always pulled; a
-    hash collision can only pull EXTRA rows, and any extra row has
-    ``seq`` ≤ its own key's max, so it loses the residual per-real-key
-    aggregate. False positives cost a few spare rows in the residual
-    aggregate, never a wrong winner.
-    """
-    cand = semijoin_candidates(
-        df, keys, seq_col, broadcast=broadcast, join_on_hash=join_on_hash
+    ``dedup_lww``; see module docstring."""
+    return lww_residual(
+        semijoin_candidates(df, keys, seq_col, broadcast=broadcast), keys, seq_col
     )
-    return lww_residual(cand, keys, seq_col)
 
 
 def semijoin_candidates(
@@ -191,39 +186,35 @@ def semijoin_candidates(
     seq_col: str,
     *,
     broadcast: bool = True,
-    join_on_hash: bool = True,
 ) -> DataFrame:
     """The rows of ``df`` that ``dedup_lww_semijoin`` hands its residual
     aggregate: pass 1's (keys, max-seq) winner list semi-joined back to
-    the full rows. Same columns as ``df``."""
+    the full rows. Same columns as ``df``.
+
+    The join is on ``(xxhash64(keys), seq)``, not the raw key columns:
+    the broadcast build side shrinks to 16 bytes per winner (vs full key
+    strings — ~10x less driver-side build, the per-batch SERIAL cost
+    that caps scaling efficiency). Still EXACT, not probabilistic: pass 1
+    groups by the REAL keys, so every key's true winner matches its own
+    (hash, max-seq) entry and is always pulled; a hash collision can
+    only pull EXTRA rows, and any extra row has ``seq`` ≤ its own key's
+    max, so it loses the residual per-real-key aggregate."""
     # max(seq) ignores nulls, so a key whose EVERY seq is null gets a
     # null winner entry; join equality on seq must therefore be
-    # null-safe (<=>), or such keys would silently vanish — the "agg"
-    # strategy keeps one row for them, and the strategies must stay
-    # bit-identical even on malformed input.
+    # null-safe (<=>), or such keys would silently vanish — dedup_lww
+    # keeps one row for them, and the reduces must stay bit-identical
+    # even on malformed input.
     mx = df.groupBy(*keys).agg(F.max(seq_col).alias(seq_col))
-    if join_on_hash:
-        kh = F.xxhash64(*[F.col(k) for k in keys])
-        build = mx.select(kh.alias("_kh"), F.col(seq_col).alias("_mseq"))
-        if broadcast:
-            build = F.broadcast(build)
-        probe = df.withColumn("_kh", kh)
-        return probe.join(
-            build,
-            (probe["_kh"] == build["_kh"])
-            & probe[seq_col].eqNullSafe(build["_mseq"]),
-            "leftsemi",
-        ).drop("_kh")
-    build = mx.select(
-        *[F.col(k).alias(f"_b_{k}") for k in keys],
-        F.col(seq_col).alias("_mseq"),
-    )
+    kh = F.xxhash64(*[F.col(k) for k in keys])
+    build = mx.select(kh.alias("_kh"), F.col(seq_col).alias("_mseq"))
     if broadcast:
         build = F.broadcast(build)
-    cond = df[seq_col].eqNullSafe(build["_mseq"])
-    for k in keys:
-        cond = cond & df[k].eqNullSafe(build[f"_b_{k}"])
-    return df.join(build, cond, "leftsemi")
+    probe = df.withColumn("_kh", kh)
+    return probe.join(
+        build,
+        (probe["_kh"] == build["_kh"]) & probe[seq_col].eqNullSafe(build["_mseq"]),
+        "leftsemi",
+    ).drop("_kh")
 
 
 def lww_residual(

@@ -37,6 +37,45 @@ def window_id(seq_col: str, batch_events: int):
     return F.expr(f"CAST(`{seq_col}` AS BIGINT) div {int(batch_events)}")
 
 
+class _Maintenance:
+    """The in-loop maintenance schedule both drivers share: ``compact()``
+    after every ``compact_every`` applied batches and ``vacuum()`` after
+    every ``vacuum_every``, compaction first when both fall on one batch
+    so vacuum reclaims the files it just obsoleted. ``ReplayDriver``'s
+    docstring has the defaults and the trade-offs."""
+
+    def __init__(self, table: LakeTable, compact_every: int | None,
+                 compact_opts: dict[str, Any] | None, vacuum_every: int | None,
+                 vacuum_opts: dict[str, Any] | None):
+        if compact_every is not None and compact_every < 1:
+            raise ValueError("compact_every must be >= 1")
+        if vacuum_every is not None and vacuum_every < 1:
+            raise ValueError("vacuum_every must be >= 1")
+        self.table = table
+        self.every = {"compact": compact_every, "vacuum": vacuum_every}
+        self.opts = {
+            "compact": {"min_files": 2, "drop_tombstones": False,
+                        **(compact_opts or {})},
+            "vacuum": {"retain_versions": 2, "grace_seconds": 0,
+                       **(vacuum_opts or {})},
+        }
+        # applied batches since each op last ran
+        self.since = {"compact": 0, "vacuum": 0}
+
+    def after_applied(self) -> dict[str, Any]:
+        """Count one applied batch and run what is due; returns each run
+        op's stats (with its ``wall_sec``) by name."""
+        ran = {}
+        for op, every in self.every.items():
+            self.since[op] += 1
+            if every and self.since[op] >= every:
+                t0 = time.monotonic()
+                ran[op] = getattr(self.table, op)(**self.opts[op])
+                ran[op]["wall_sec"] = round(time.monotonic() - t0, 3)
+                self.since[op] = 0
+        return ran
+
+
 class ReplayDriver:
     """Seq-windowed batch replay into a LakeTable."""
 
@@ -47,16 +86,14 @@ class ReplayDriver:
         stream_id: str = "replay",
         batch_events: int | None = 1_000_000,
         num_batches: int | None = None,
-        salt_buckets: int | None = None,
         op_col: str = "op",
         seq_col: str = "seq",
-        dedup_strategy: str = "semijoin",
         compact_every: int | None = None,
         compact_opts: dict[str, Any] | None = None,
         vacuum_every: int | None = None,
         vacuum_opts: dict[str, Any] | None = None,
     ):
-        """``batch_events`` fixes the seq-window width; alternatively
+        """``batch_events`` fixes the seq-window width (≥ 1); alternatively
         ``num_batches`` derives the width from the stream's seq span (one
         column-pruned min/max aggregate — the same scan replay() needs
         for ``seq_end`` anyway), so callers never pre-``count()`` the
@@ -79,15 +116,15 @@ class ReplayDriver:
         (forwarded verbatim to ``compact()``, e.g. ``sort_cols`` /
         ``target_file_mb`` / an explicit ``drop_tombstones=True``).
 
-        ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
-        table's batch reduce (see ``LakeTable.merge``). Under the default
-        "semijoin", a window whose planned size is within
+        A merge-on-read table picks each window's batch reduce by its
+        planned size (see ``LakeTable.merge``): a window within
         ``spark.sql.autoBroadcastJoinThreshold`` is reduced in one pass
-        over the write's shuffle. Each window is a seq filter of
-        ``events``, and Catalyst estimates a filter at its input's size:
-        a replay that splits one input into several windows keeps every
-        window on the semijoin, while a one-window call per small input
-        (a tailing loop's poll) takes the one-pass reduce.
+        over the write's shuffle, a larger one through the semijoin.
+        Each window is a seq filter of ``events``, and Catalyst estimates
+        a filter at its input's size: a replay that splits one input into
+        several windows keeps every window on the semijoin, while a
+        one-window call per small input (a tailing loop's poll) takes the
+        one-pass reduce.
 
         ``vacuum_every=K`` schedules the OTHER growth term's maintenance:
         the manifest version chain and the dead data files it pins grow
@@ -111,34 +148,24 @@ class ReplayDriver:
         commits are never in flight while it vacuums, so every
         unreferenced file goes at once; pass a grace if another process
         writes to the table)."""
-        if num_batches is not None and num_batches < 1:
-            raise ValueError("num_batches must be >= 1")
-        if compact_every is not None and compact_every < 1:
-            raise ValueError("compact_every must be >= 1")
-        if vacuum_every is not None and vacuum_every < 1:
-            raise ValueError("vacuum_every must be >= 1")
+        if num_batches is not None:
+            if num_batches < 1:
+                raise ValueError("num_batches must be >= 1")
+        elif batch_events is None or batch_events < 1:
+            # a zero width divides by zero in replay(), and a negative
+            # one yields no windows: the replay would ingest nothing
+            raise ValueError("batch_events must be >= 1 unless num_batches is set")
         self.table = table
         self.stream_id = stream_id
         self.batch_events = batch_events
         self.num_batches = num_batches
-        self.salt_buckets = salt_buckets
         self.op_col = op_col
         self.seq_col = seq_col
-        self.dedup_strategy = dedup_strategy
-        self.compact_every = compact_every
-        self.compact_opts = {
-            "min_files": 2,
-            "drop_tombstones": False,
-            **(compact_opts or {}),
-        }
-        self.vacuum_every = vacuum_every
-        self.vacuum_opts = {"retain_versions": 2, "grace_seconds": 0,
-                            **(vacuum_opts or {})}
-        # persist across replay() calls: a tailing loop invokes replay()
+        # persists across replay() calls: a tailing loop invokes replay()
         # once per poll, and "every K applied batches" must count across
         # polls, not per call
-        self._applied_since_compact = 0
-        self._applied_since_vacuum = 0
+        self._maintenance = _Maintenance(
+            table, compact_every, compact_opts, vacuum_every, vacuum_opts)
 
     def replay(
         self, events: DataFrame, *, seq_start: int = 0, seq_end: int | None = None
@@ -211,34 +238,13 @@ class ReplayDriver:
                 seq_col=self.seq_col,
                 stream_id=self.stream_id,
                 batch_id=batch_id,
-                salt_buckets=self.salt_buckets,
-                dedup_strategy=self.dedup_strategy,
             )
             s["batch_id"] = batch_id
             # per-batch wall rides along with the lineage counts: a
             # sustained-ingest operator watches this stay flat as the
             # table grows (MoR merges never read stored data)
             s["wall_sec"] = round(time.monotonic() - t0, 3)
-            self._applied_since_compact += 1
-            self._applied_since_vacuum += 1
-            if (
-                self.compact_every
-                and self._applied_since_compact >= self.compact_every
-            ):
-                t0 = time.monotonic()
-                c = self.table.compact(**self.compact_opts)
-                c["wall_sec"] = round(time.monotonic() - t0, 3)
-                s["compact"] = c
-                self._applied_since_compact = 0
-            if (
-                self.vacuum_every
-                and self._applied_since_vacuum >= self.vacuum_every
-            ):
-                t0 = time.monotonic()
-                v = self.table.vacuum(**self.vacuum_opts)
-                v["wall_sec"] = round(time.monotonic() - t0, 3)
-                s["vacuum"] = v
-                self._applied_since_vacuum = 0
+            s.update(self._maintenance.after_applied())
             stats.append(s)
         return stats
 
@@ -257,8 +263,6 @@ def stream_into_table(
     stream_id: str = "stream",
     op_col: str = "op",
     seq_col: str = "seq",
-    salt_buckets: int | None = None,
-    dedup_strategy: str = "semijoin",
     trigger_once: bool = True,
     patches: bool = False,
     set_col: str = "set_cols",
@@ -274,11 +278,11 @@ def stream_into_table(
 
     ``trigger_once`` runs one availableNow pass (the scheduled-batch shape
     the reference uses); set False for continuous micro-batches.
-    ``salt_buckets`` and ``dedup_strategy`` shape only a merge-on-read
-    table's batch reduce (see ``LakeTable.merge``): a micro-batch whose
-    planned size is within ``spark.sql.autoBroadcastJoinThreshold`` is
-    reduced in one pass over the write's shuffle, a larger one (or one of
-    unknown size) through the semijoin.
+    A merge-on-read table picks each micro-batch's reduce by its planned
+    size (see ``LakeTable.merge``): a micro-batch within
+    ``spark.sql.autoBroadcastJoinThreshold`` is reduced in one pass over
+    the write's shuffle, a larger one (or one of unknown size) through
+    the semijoin.
 
     ``compact_every=K`` compacts the table after every K APPLIED
     micro-batches (redelivered batches that marker-short-circuit don't
@@ -301,9 +305,8 @@ def stream_into_table(
     Streaming's micro-batch ordering — replay from any checkpoint, or a
     stale batch redelivered under a fresh id, reconverges.
     """
-    copts = {"min_files": 2, "drop_tombstones": False, **(compact_opts or {})}
-    vopts = {"retain_versions": 2, "grace_seconds": 0, **(vacuum_opts or {})}
-    applied_count = [0]
+    maintenance = _Maintenance(
+        table, compact_every, compact_opts, vacuum_every, vacuum_opts)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if patches:
@@ -314,7 +317,6 @@ def stream_into_table(
                 set_col=set_col,
                 stream_id=stream_id,
                 batch_id=batch_id,
-                dedup_strategy=dedup_strategy,
             )
         else:
             s = table.merge(
@@ -323,15 +325,9 @@ def stream_into_table(
                 seq_col=seq_col,
                 stream_id=stream_id,
                 batch_id=batch_id,
-                salt_buckets=salt_buckets,
-                dedup_strategy=dedup_strategy,
             )
         if s.get("applied", True):
-            applied_count[0] += 1
-            if compact_every and applied_count[0] % compact_every == 0:
-                table.compact(**copts)
-            if vacuum_every and applied_count[0] % vacuum_every == 0:
-                table.vacuum(**vopts)
+            maintenance.after_applied()
 
     writer = (
         events_stream.writeStream.foreachBatch(apply_batch)

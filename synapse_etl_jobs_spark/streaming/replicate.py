@@ -145,8 +145,8 @@ def replicate_stream(
     wrapper). ``trigger_once=False`` returns the running continuous
     query. ``max_versions_per_trigger`` bounds catch-up batches
     (backpressure); ``merge_kwargs`` forward to the replica's ``merge``
-    (e.g. ``salt_buckets`` for a hot-key merge-on-read replica; a
-    copy-on-write replica's fold ignores it).
+    (e.g. ``auto_evolve=False`` to keep the replica's schema fixed; it
+    defaults to True here).
 
     ``where`` filters the changelog before it is applied — a PARTIAL
     replica (fan-out routing: one firehose table into per-language /

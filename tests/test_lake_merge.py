@@ -44,6 +44,20 @@ def assert_states_equal(actual: pd.DataFrame, expected: pd.DataFrame):
     pd.testing.assert_frame_equal(actual, expected, check_dtype=False)
 
 
+def spy_semijoin(monkeypatch) -> dict:
+    """Record, per table path, whether the batch its bucketed write gets
+    was reduced through the semijoin (a LeftSemi in its optimized plan)."""
+    semi = {}
+    real_write = LakeTable._salted_bucket_write
+
+    def spy_write(self, df, *args, **kwargs):
+        semi[self.path] = "LeftSemi" in df._jdf.queryExecution().optimizedPlan().toString()
+        return real_write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_salted_bucket_write", spy_write)
+    return semi
+
+
 @pytest.fixture(scope="module")
 def events(spark):
     ev = flatten_events(synth_change_events(spark, 4000, seed=7, n_keys=800))
@@ -94,12 +108,6 @@ def test_merge_out_of_order_batches(spark, events, tmp_table_path):
             (F.col("seq") >= i * 1000) & (F.col("seq") < (i + 1) * 1000)
         )
         t.merge(batch, batch_id=i)
-    assert_states_equal(table_state(t), pandas_oracle(events.toPandas()))
-
-
-def test_salted_merge_same_result(spark, events, tmp_table_path):
-    t = LakeTable.create(spark, tmp_table_path, SCHEMA, KEYS, num_buckets=8)
-    t.merge(events, batch_id=0, salt_buckets=8)
     assert_states_equal(table_state(t), pandas_oracle(events.toPandas()))
 
 
@@ -325,30 +333,21 @@ def test_time_travel(spark, events, tmp_table_path):
 
 
 def test_dedup_strategies_identical(spark, events):
-    """"agg", "semijoin" (broadcast and plain-join), and salted dedup all
-    produce the same winner set — including on exact-duplicate delivery
-    (the synth stream re-emits every 17th event verbatim)."""
+    """The one-pass, semijoin (broadcast and plain-join) and salted LWW
+    reduces all produce the same winner set — including on exact-duplicate
+    delivery (the synth stream re-emits every 17th event verbatim)."""
     from synapse_etl_jobs_spark.operators.dedup import (
         dedup_lww, dedup_lww_salted, dedup_lww_semijoin,
     )
 
     base = dedup_lww(events, KEYS, "seq")
     for variant in (
-        dedup_lww(events, KEYS, "seq", strategy="semijoin"),
+        dedup_lww_semijoin(events, KEYS, "seq"),
         dedup_lww_semijoin(events, KEYS, "seq", broadcast=False),
         dedup_lww_salted(events, KEYS, "seq", salt_buckets=8),
     ):
         assert variant.exceptAll(base).isEmpty()
         assert base.exceptAll(variant).isEmpty()
-
-
-def test_merge_dedup_strategy_param(spark, events, tmp_table_path):
-    """merge(dedup_strategy="agg") and the default semijoin path agree."""
-    t1 = LakeTable.create(spark, tmp_table_path + "_sj", SCHEMA, KEYS, num_buckets=4)
-    t1.merge(events, batch_id=0)
-    t2 = LakeTable.create(spark, tmp_table_path + "_agg", SCHEMA, KEYS, num_buckets=4)
-    t2.merge(events, batch_id=0, dedup_strategy="agg")
-    assert_states_equal(table_state(t1), table_state(t2))
 
 
 def test_vacuum_expires_old_versions(spark, events, tmp_table_path):
@@ -396,10 +395,11 @@ def test_vacuum_retains_mor_deltas(spark, events, tmp_table_path):
     assert_states_equal(table_state(LakeTable.load(spark, tmp_table_path)), state)
 
 
-def test_extreme_skew_correctness(spark, tmp_table_path):
+def test_extreme_skew_correctness(spark, tmp_table_path, monkeypatch):
     """SURVEY §5 test 5: one hot repo owns ~half the events — replay
-    correctness is unchanged through both the semijoin (default) and the
-    salted-agg dedup paths."""
+    correctness is unchanged through the copy-on-write fold and through
+    the merge-on-read reduce on both sides of its size gate (one pass at
+    the default broadcast threshold, the semijoin at 1 byte)."""
     ev = flatten_events(
         synth_change_events(spark, 6000, seed=13, n_keys=1500, skew_exp=8.0)
     ).persist()
@@ -409,13 +409,23 @@ def test_extreme_skew_correctness(spark, tmp_table_path):
         assert top["count"] / n_ev > 0.4  # genuinely pathological skew
 
         oracle = pandas_oracle(ev.toPandas())
-        t1 = LakeTable.create(spark, tmp_table_path + "_sj", SCHEMA, KEYS, num_buckets=4)
-        t1.merge(ev, batch_id=0)  # semijoin default
+        t1 = LakeTable.create(spark, tmp_table_path + "_cow", SCHEMA, KEYS, num_buckets=4)
+        t1.merge(ev, batch_id=0)
         assert_states_equal(table_state(t1), oracle)
 
-        t2 = LakeTable.create(spark, tmp_table_path + "_salt", SCHEMA, KEYS, num_buckets=4)
-        t2.merge(ev, batch_id=0, salt_buckets=8)  # salted two-phase agg
-        assert_states_equal(table_state(t2), oracle)
+        semi = spy_semijoin(monkeypatch)
+        gate = "spark.sql.autoBroadcastJoinThreshold"
+        was = spark.conf.get(gate)
+        try:
+            for threshold in (was, "1"):  # one pass, then the semijoin
+                spark.conf.set(gate, threshold)
+                t = LakeTable.create(spark, f"{tmp_table_path}_mor{threshold}", SCHEMA,
+                                     KEYS, num_buckets=4, write_mode="mor")
+                t.merge(ev, batch_id=0)
+                assert semi[t.path] == (threshold == "1")
+                assert_states_equal(table_state(t), oracle)
+        finally:
+            spark.conf.set(gate, was)
     finally:
         ev.unpersist()
 
@@ -700,14 +710,7 @@ def test_mor_reduce_same_across_size_gate(spark, tmp_path, monkeypatch):
     listed.write.parquet(str(tmp_path / "batch"))
     sources = {"list": listed, "parquet": spark.read.parquet(str(tmp_path / "batch"))}
 
-    semi = {}
-    real_write = LakeTable._salted_bucket_write
-
-    def spy_write(self, df, *args, **kwargs):
-        semi[self.path] = "LeftSemi" in df._jdf.queryExecution().optimizedPlan().toString()
-        return real_write(self, df, *args, **kwargs)
-
-    monkeypatch.setattr(LakeTable, "_salted_bucket_write", spy_write)
+    semi = spy_semijoin(monkeypatch)
     gate = "spark.sql.autoBroadcastJoinThreshold"
     was = spark.conf.get(gate)
     states = {}

@@ -6,6 +6,7 @@ way a tailing loop delivers them.
 """
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.types import StructType
 
 from synapse_etl_jobs_spark.lake import LakeTable
@@ -199,3 +200,36 @@ def test_stream_into_table_compact_every(spark, tmp_path):
         assert _files(t) <= _files(oracle) * 2
     finally:
         ev.unpersist()
+
+
+@pytest.mark.parametrize("batch_events", [0, -5, None])
+def test_replay_driver_rejects_window_width(spark, tmp_path, batch_events):
+    """Without ``num_batches`` the window width must be >= 1: replay()
+    would divide by a zero width, fail on ``None``, and find no windows
+    for a negative one — silently ingesting nothing."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS,
+                         num_buckets=4, write_mode="mor")
+    with pytest.raises(ValueError, match="batch_events"):
+        ReplayDriver(t, batch_events=batch_events)
+    # a derived width needs no batch_events
+    ReplayDriver(t, batch_events=batch_events, num_batches=2)
+
+
+def test_stream_into_table_rejects_compact_every_zero(spark, tmp_path):
+    """``stream_into_table`` validates its maintenance schedule like
+    ``ReplayDriver`` does, before the query starts: ``compact_every=0``
+    would otherwise never compact, and a negative K compacts every |K|."""
+    src = tmp_path / "src"
+    flatten_events(synth_change_events(spark, 50, seed=14, n_keys=10)) \
+        .coalesce(1).write.parquet(str(src))
+    stream = spark.readStream.schema(spark.read.parquet(str(src)).schema) \
+        .parquet(str(src))
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS,
+                         num_buckets=4, write_mode="mor")
+    for every in (0, -2):
+        with pytest.raises(ValueError, match="compact_every"):
+            stream_into_table(t, stream, str(tmp_path / "ckpt"), compact_every=every)
+    with pytest.raises(ValueError, match="vacuum_every"):
+        stream_into_table(t, stream, str(tmp_path / "ckpt"), vacuum_every=0)
+    assert t.manifest.table_version == 0
+    assert not (tmp_path / "ckpt").exists()

@@ -102,8 +102,8 @@ def test_lww_dedup_with_map_payload_all_strategies(spark):
     }
     for out in (
         dedup_lww(df, ["k"], "seq"),
-        dedup_lww(df, ["k"], "seq", strategy="semijoin"),
-        dedup_lww_semijoin(df, ["k"], "seq", broadcast=False, join_on_hash=False),
+        dedup_lww_semijoin(df, ["k"], "seq"),
+        dedup_lww_semijoin(df, ["k"], "seq", broadcast=False),
         dedup_lww_salted(df, ["k"], "seq", salt_buckets=4),
     ):
         got = {

@@ -46,13 +46,6 @@ def main() -> None:
     p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--batch-events", type=int, default=10_000_000)
     p.add_argument("--stream-id", default="replay")
-    p.add_argument("--salt-buckets", type=int, default=None,
-                   help="salted two-phase dedup (only with --dedup-strategy agg)")
-    p.add_argument("--dedup-strategy", choices=["semijoin", "agg"], default="semijoin",
-                   help="merge-on-read batch reduce: semijoin (default) reduces a batch "
-                        "within spark.sql.autoBroadcastJoinThreshold in one pass "
-                        "and a larger one through a broadcast winner list; agg "
-                        "reduces every batch in one pass")
     p.add_argument("--compact", action="store_true", help="compact after replay")
     p.add_argument("--exclude", default="op,seq,ts_ms,source_partition,offset",
                    help="envelope columns not stored in the table")
@@ -100,7 +93,6 @@ def main() -> None:
 
     driver = ReplayDriver(
         table, stream_id=args.stream_id, batch_events=args.batch_events,
-        salt_buckets=args.salt_buckets, dedup_strategy=args.dedup_strategy,
     )
     t0 = time.time()
     stats = driver.replay(events, seq_start=0, seq_end=seq_end)

@@ -36,12 +36,6 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--stream-id", default="stream")
-    p.add_argument("--dedup-strategy", choices=["semijoin", "agg"],
-                   default="semijoin",
-                   help="merge-on-read batch reduce: semijoin (default) reduces a batch "
-                        "within spark.sql.autoBroadcastJoinThreshold in one pass "
-                        "and a larger one through a broadcast winner list; agg "
-                        "reduces every batch in one pass")
     p.add_argument("--stateful-filter", action="store_true",
                    help="drop stale/duplicate events in Spark state "
                         "BEFORE the merge (bounded per-key watermark "
@@ -103,7 +97,7 @@ def main() -> None:
 
     query = stream_into_table(
         table, stream, args.checkpoint,
-        stream_id=args.stream_id, dedup_strategy=args.dedup_strategy,
+        stream_id=args.stream_id,
         trigger_once=not args.continuous,
         patches=args.patches,
     )
